@@ -1149,6 +1149,8 @@ class Lake:
             )
             if e.rows > 0
         ]
+        if not entries:  # nothing references an all-empty write
+            shutil.rmtree(out, ignore_errors=True)
         return entries
 
     def _check_message(self, name: str, message: str | None) -> None:

@@ -2,6 +2,8 @@
 quick parity wins: require_commit_message enforcement, variant columns,
 salted joins."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -179,14 +181,133 @@ def test_merge_inline_guard_not_truncated(spark, lake):
     assert res["num_inserted"] == 2000
 
 
-def test_merge_small_gate_is_bounded(spark):
-    """_small never full-counts the source: limit(threshold+1) probes."""
-    from pg_ducklake_spark.operators.merge import _small
+def test_merge_broadcast_and_shuffle_branches(spark, lake, monkeypatch):
+    """Both sides of the exact-row-count guard give the same result: at
+    the default the 1000-row source's keys are broadcast to the probe;
+    with the threshold monkeypatched below the source size the probe
+    shuffles and the inserts are not coalesced."""
+    from pg_ducklake_spark.operators import merge as merge_mod
 
-    assert _small(spark.range(10).withColumnRenamed("id", "k"))
-    assert not _small(
-        spark.range(200_000).withColumnRenamed("id", "k"), threshold_rows=1000
+    src = spark.range(500, 1500).select(
+        F.col("id").cast("int").alias("k"), F.lit("new").alias("v")
     )
+    want = {k: "old" for k in range(0, 2000, 2)}
+    want.update({k: "new" for k in range(500, 1500)})
+    for name, bcast_rows in [("tb", 100_000), ("ts", 10)]:
+        monkeypatch.setattr(merge_mod, "BROADCAST_SOURCE_ROWS", bcast_rows)
+        lake.create_table(name, "k int, v string")
+        lake.insert(
+            name,
+            spark.range(0, 2000, 2).select(
+                F.col("id").cast("int").alias("k"), F.lit("old").alias("v")
+            ),
+        )
+        res = lake.merge(name, src, on=["k"], when_matched_update={"v": "source.v"})
+        assert res == {"num_updated": 500, "num_deleted": 0, "num_inserted": 500}
+        assert {r.k: r.v for r in lake.table(name).collect()} == want
+
+
+@pytest.mark.parametrize("key_type", ["string", "int_all_null"])
+def test_merge_without_key_pruning(spark, lake, key_type):
+    """Keys that give no integer bounds — a string key, or an integer
+    key that is NULL in every source row — skip file pruning and still
+    merge correctly. NULL source keys never match: they are inserted."""
+    ktype = "string" if key_type == "string" else "int"
+    lake.create_table("tp", f"k {ktype}, v int")
+    for part in range(3):  # three files
+        rows = [(str(i) if ktype == "string" else i, 0) for i in range(part * 10, part * 10 + 10)]
+        lake.insert("tp", spark.createDataFrame(rows, f"k {ktype}, v int"))
+    if key_type == "string":
+        src_rows = [("5", 1), ("25", 1), ("x", 1), (None, 1), (None, 2)]
+        want_upd, want_ins = 2, 3
+    else:
+        src_rows = [(None, 1), (None, 2)]
+        want_upd, want_ins = 0, 2
+    res = lake.merge(
+        "tp", spark.createDataFrame(src_rows, f"k {ktype}, v int"), on=["k"],
+        when_matched_update={"v": "source.v"},
+    )
+    assert res == {"num_updated": want_upd, "num_deleted": 0, "num_inserted": want_ins}
+    got = sorted(((r.k, r.v) for r in lake.table("tp").collect()), key=repr)
+    want = {(str(i) if ktype == "string" else i): 0 for i in range(30)}
+    if key_type == "string":
+        want.update({"5": 1, "25": 1})
+        extra = [("x", 1), (None, 1), (None, 2)]
+    else:
+        extra = [(None, 1), (None, 2)]
+    assert got == sorted(list(want.items()) + extra, key=repr)
+
+
+def test_merge_releases_source_cache_on_every_path(spark, t):
+    """Every exit path of merge unpersists what it cached: success, the
+    duplicate-key error, the inline refusal, and the zero-change return
+    (which also leaves no empty data directory behind)."""
+    jsc = spark.sparkContext._jsc
+    base = jsc.getPersistentRDDs().size()
+    t.merge("t", _src(spark, [(2, "B", 20.0), (4, "d", 4.0)]), on=["k"],
+            when_matched_update={"v": "source.v"})
+    assert jsc.getPersistentRDDs().size() == base
+    with pytest.raises(LakeError, match="duplicate keys"):
+        t.merge("t", _src(spark, [(1, "x", 0.0), (1, "y", 0.0)]), on=["k"],
+                when_matched_update={"v": "source.v"})
+    assert jsc.getPersistentRDDs().size() == base
+    data_dir = os.path.join(t._table_dir("t"), "data")
+    dirs = sorted(os.listdir(data_dir))
+    snap = t.current_snapshot("t")
+    res = t.merge("t", _src(spark, [(1, "zz", 0.0), (3, "zz", 0.0)]), on=["k"])
+    assert res == {"num_updated": 0, "num_deleted": 0, "num_inserted": 0}
+    assert t.current_snapshot("t") == snap
+    assert sorted(os.listdir(data_dir)) == dirs
+    assert jsc.getPersistentRDDs().size() == base
+    t.set_option("data_inlining_row_limit", 10, table="t")
+    t.insert_rows("t", [{"k": 7, "v": "inline", "n": 7.0}])
+    with pytest.raises(LakeError, match="flush"):
+        t.merge("t", _src(spark, [(7, "x", 0.0)]), on=["k"],
+                when_matched_update={"v": "source.v"})
+    assert jsc.getPersistentRDDs().size() == base
+
+
+def test_merge_job_count_and_file_layout(spark, lake):
+    """A merge whose source covers one file's key range probes only that
+    file, rewrites it into one file and writes its inserts into one more.
+    Job count pinned with AQE off."""
+    lake.create_table("tj", "k bigint, v string")
+    lake.insert(
+        "tj",
+        spark.range(0, 16000, 2)
+        .select(F.col("id").alias("k"), F.lit("old").alias("v"))
+        .repartitionByRange(8, "k"),
+    )
+    before = dict(lake._state("tj").files)
+    assert len(before) == 8
+    # Every key in the second file's range: its even keys update, the
+    # odd ones between them insert.
+    entry = sorted(before.values(), key=lambda e: e.stats["k"]["min"])[1]
+    lo, hi, n = entry.stats["k"]["min"], entry.stats["k"]["max"], entry.rows
+    src = spark.range(lo, hi + 1).select(
+        F.col("id").alias("k"), F.lit("new").alias("v")
+    ).localCheckpoint(eager=True)  # keep source prep out of the count
+    sc = spark.sparkContext
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        sc.setJobGroup("merge_jobcount", "merge job-count pin")
+        res = lake.merge("tj", src, on=["k"], when_matched_update={"v": "source.v"})
+        jobs = sc.statusTracker().getJobIdsForGroup("merge_jobcount")
+    finally:
+        sc.setJobGroup(None, None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert res == {"num_updated": n, "num_deleted": 0, "num_inserted": n - 1}
+    after = lake._state("tj").files
+    assert len(set(before) - set(after)) == 1
+    added = set(after) - set(before)
+    assert sorted(after[f].rows for f in added) == [n - 1, n]
+    assert len(after) <= len(before) + 2
+    # Measured 9 jobs: source aggregate 1, probe 2, data write 3,
+    # change-feed write 3. The earlier shape (dup check, limit probe,
+    # full-table hit scan, rewrite, full-table anti-join, insert count,
+    # insert and change-feed writes) measured 14 on this merge.
+    assert len(jobs) <= 9, f"{len(jobs)} jobs for a one-file merge"
 
 
 def test_merge_many_key_upsert_counts(spark, lake):

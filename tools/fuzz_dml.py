@@ -1,6 +1,6 @@
 """Randomized differential DML: apply a seeded random sequence of
 lakehouse mutations (batch inserts, inline-path inserts, predicate
-updates, predicate deletes, vacuum, inline flush) to a Lake table AND
+updates, predicate deletes, merges, vacuum, inline flush) to a Lake table AND
 mirror every data-changing op onto a plain DuckDB table, comparing the
 full table contents after every step — then spot-check TIME TRAVEL by
 replaying the DuckDB mirror up to an earlier op and comparing it with
@@ -47,6 +47,47 @@ def _preds(rng: random.Random):
     )
 
 
+def _ordered(rows) -> list:
+    """Rows sorted with NULLs first per column (merge inserts NULL ids)."""
+    return sorted(rows, key=lambda r: tuple((v is not None, v) for v in r))
+
+
+def _merge_op(rng: random.Random, next_id: int):
+    """A random MERGE on ``id``: source rows hitting live, deleted and
+    never-used ids (fresh ids start at ``next_id``), sometimes a NULL id
+    (never matches: inserted); updates or deletes the matched rows,
+    inserts the rest or not. Returns the source rows, the
+    ``Lake.merge`` options and the mirror's equivalent statements,
+    which stage the source with a pre-merge ``hit`` flag first so the
+    update/delete and the insert both see the table as it was."""
+    ids = set(rng.sample(range(max(next_id, 1)), k=min(next_id, rng.randint(1, 6))))
+    ids |= {next_id + i for i in range(rng.randint(0 if ids else 1, 3))}
+    keys = sorted(ids) + ([None] if rng.random() < 0.3 else [])
+    rows = [(k, rng.choice(GROUPS), rng.randint(0, 999)) for k in keys]
+    action = rng.choice(["update", "delete"])
+    insert = rng.random() < 0.8
+    kw = {
+        "when_matched_update": {"val": "target.val + source.val"} if action == "update" else None,
+        "when_matched_delete": action == "delete",
+        "when_not_matched_insert": insert,
+    }
+    vals = ", ".join(
+        f"({'NULL' if k is None else k}, '{g}', {v})" for k, g, v in rows
+    )
+    sql = [
+        "CREATE OR REPLACE TEMP TABLE m AS SELECT CAST(s.id AS BIGINT) AS id,"
+        " s.grp, CAST(s.val AS BIGINT) AS val,"
+        " EXISTS (SELECT 1 FROM f WHERE f.id = s.id) AS hit"
+        f" FROM (VALUES {vals}) s(id, grp, val)",
+        "UPDATE f SET val = f.val + m.val FROM m WHERE m.hit AND f.id = m.id"
+        if action == "update"
+        else "DELETE FROM f WHERE id IN (SELECT id FROM m WHERE hit)",
+    ]
+    if insert:
+        sql.append("INSERT INTO f SELECT id, grp, val FROM m WHERE NOT hit")
+    return rows, kw, "; ".join(sql)
+
+
 class Mirror:
     """The DuckDB side: one table, plus the op log for replays."""
 
@@ -60,18 +101,19 @@ class Mirror:
         self.log.append(sql)
 
     def rows(self):
-        return sorted(self.con.execute("SELECT * FROM f").fetchall())
+        return _ordered(self.con.execute("SELECT * FROM f").fetchall())
 
     def replay(self, upto: int):
         con = duckdb.connect()
         con.execute(f"CREATE TABLE f ({DUCK_SCHEMA})")
         for sql in self.log[:upto]:
             con.execute(sql)
-        return sorted(con.execute("SELECT * FROM f").fetchall())
+        return _ordered(con.execute("SELECT * FROM f").fetchall())
 
 
 def run(ops: int, seed: int, spark=None) -> list[str]:
     from pg_ducklake_spark import Lake
+    from pg_ducklake_spark.errors import LakeError
 
     if spark is None:
         from pg_ducklake_spark.session import get_spark
@@ -90,13 +132,13 @@ def run(ops: int, seed: int, spark=None) -> list[str]:
         versions: list[int] = []  # lake snapshot after each mirrored op
 
         def lake_rows():
-            return sorted(tuple(r) for r in lake.table("f").collect())
+            return _ordered(tuple(r) for r in lake.table("f").collect())
 
         for step in range(ops):
             op = rng.choices(
                 ["insert", "insert_inline", "update", "delete",
-                 "vacuum", "flush"],
-                weights=[30, 15, 20, 20, 8, 7],
+                 "merge", "vacuum", "flush"],
+                weights=[30, 15, 20, 20, 15, 8, 7],
             )[0]
             if op == "insert":
                 n = rng.randint(3, 12)
@@ -136,11 +178,23 @@ def run(ops: int, seed: int, spark=None) -> list[str]:
                 pred = _preds(rng)
                 lake.delete("f", pred)
                 mirror.apply(f"DELETE FROM f WHERE {pred}")
+            elif op == "merge":
+                rows, kw, sql = _merge_op(rng, next_id)
+                next_id += len(rows)
+                src = spark.createDataFrame(rows, SCHEMA)
+                try:
+                    lake.merge("f", src, ["id"], **kw)
+                except LakeError as e:  # matched an unflushed inline row
+                    if "flush" not in str(e):
+                        raise
+                    lake.flush_inlined_data()
+                    lake.merge("f", src, ["id"], **kw)
+                mirror.apply(sql)
             elif op == "vacuum":
                 lake.vacuum("f")  # no mirror: must not change contents
             else:
                 lake.flush_inlined_data()  # ditto
-            if op in ("insert", "insert_inline", "update", "delete"):
+            if op in ("insert", "insert_inline", "update", "delete", "merge"):
                 versions.append(lake.current_snapshot("f"))
             got, want = lake_rows(), mirror.rows()
             if got != want:
@@ -156,7 +210,7 @@ def run(ops: int, seed: int, spark=None) -> list[str]:
             for k in sorted(rng.sample(range(1, len(versions) + 1),
                                        k=min(3, len(versions)))):
                 v = versions[k - 1]
-                tt = sorted(
+                tt = _ordered(
                     tuple(r) for r in lake.table("f", version=v).collect()
                 )
                 rep = mirror.replay(k)

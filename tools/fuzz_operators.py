@@ -13,10 +13,10 @@ Checks: bloom (prune ∘ semi == semi, contains == IN), asof_join
 (latest right <= left per key, ties included), group_order_statistic
 (lower median per group), pack_sequences (bin arithmetic vs window
 prefix sums), substring_spans (unicode/multi-space/all-whitespace
-corpora vs the registered oracle), merge (update/delete/insert vs
-set-logic SQL), bm25 (Zipf corpora, tied-score duplicates, tf>1
-plants), hll (Zipf-heavy repeated/negative user_ids, single-user
-types).
+corpora vs the registered oracle), merge (update/delete/insert and the
+change feed vs set-logic SQL, over a pruned multi-file target), bm25
+(Zipf corpora, tied-score duplicates, tf>1 plants), hll (Zipf-heavy
+repeated/negative user_ids, single-user types).
 
 Usage: python tools/fuzz_operators.py [--seeds 1,2,3]
 Exits 1 on any divergence.
@@ -299,43 +299,66 @@ def check_substring_spans(spark, con, rng, tmp) -> list[str]:
 
 
 def check_merge(spark, con, rng, tmp) -> list[str]:
+    """Upsert then delete-merge against set-logic SQL. The target spans
+    four files by key range and the source keys only the middle two, so
+    file pruning has files to skip; one target key sits in two files
+    (one source row updates both rows); one target row whose key the
+    source carries is DV-deleted first (so it is inserted, not
+    matched); two source rows have a NULL key (inserted, never
+    matched). The upsert's change feed is compared change type by
+    change type."""
     from pg_ducklake_spark.lake import Lake
     from pg_ducklake_spark.operators.merge import merge
 
     lake = Lake(spark, os.path.join(tmp, "lake"))
-    base_n, src_n, dom = 600, 200, 400
-    bk = rng.permutation(dom)[:base_n].astype("int64")  # unique target keys
-    bv = rng.integers(0, 100, size=base_n).astype("int64")
-    base = [(int(a), int(b)) for a, b in zip(bk, bv)]
-    sk = rng.permutation(dom)[:src_n].astype("int64")  # unique source keys
-    sv = rng.integers(1000, 1100, size=src_n).astype("int64")
-    src_rows = [(int(a), int(b)) for a, b in zip(sk, sv)]
+    dom = 400
+    bk = np.sort(rng.permutation(dom)[:300]).astype("int64")  # unique
+    chunks = [
+        [(int(k), int(v)) for k, v in zip(c, rng.integers(0, 100, size=len(c)))]
+        for c in np.array_split(bk, 4)
+    ]
+    dup_k = chunks[1][len(chunks[1]) // 2][0]
+    chunks[2].append((dup_k, int(rng.integers(0, 100))))  # same key, 2nd file
+    gone_k = chunks[2][len(chunks[2]) // 3][0]
+    lo, hi = chunks[1][0][0], chunks[2][-2][0]
+    sk = rng.permutation(np.arange(lo, hi + 1))[: (hi - lo) // 2]
+    sk = sorted({int(x) for x in sk} | {dup_k, gone_k})
+    src_rows = [(k, int(rng.integers(1000, 1100))) for k in sk]
+    src_rows += [(None, 1100), (None, 1101)]
     lake.create_table("mt", "k bigint, v bigint")
-    lake.insert("mt", spark.createDataFrame(base, "k bigint, v bigint"))
-    src = spark.createDataFrame(src_rows, "k bigint, v bigint")
-    merge(
-        lake, "mt", src, on=["k"],
-        when_matched_update={"v": "source.v"},
-        when_not_matched_insert=True,
-    )
-    got = lake.table("mt")
-    con.execute(
-        "CREATE OR REPLACE TABLE mbase (k BIGINT, v BIGINT);"
-    )
+    for c in chunks:
+        lake.insert("mt", spark.createDataFrame(c, "k bigint, v bigint"))
+    lake.delete("mt", f"k = {gone_k}")
+    base = [r for c in chunks for r in c if r[0] != gone_k]
+    con.execute("CREATE OR REPLACE TABLE mbase (k BIGINT, v BIGINT)")
     con.executemany("INSERT INTO mbase VALUES (?, ?)", base)
     con.execute("CREATE OR REPLACE TABLE msrc (k BIGINT, v BIGINT)")
     con.executemany("INSERT INTO msrc VALUES (?, ?)", src_rows)
-    errs = _compare(
-        "merge_upsert",
-        got,
+    merge(
+        lake, "mt", spark.createDataFrame(src_rows, "k bigint, v bigint"),
+        on=["k"], when_matched_update={"v": "source.v"},
+        when_not_matched_insert=True,
+    )
+    v_up = lake.current_snapshot("mt")
+    new_rows = "SELECT s.k, s.v FROM msrc s WHERE s.k IS NULL OR s.k NOT IN (SELECT k FROM mbase)"
+    con.execute(
+        "CREATE OR REPLACE TABLE mafter AS "
+        "SELECT b.k, COALESCE(s.v, b.v) AS v FROM mbase b LEFT JOIN msrc s USING (k) "
+        f"UNION ALL {new_rows}"
+    )
+    errs = _compare("merge_upsert", lake.table("mt"), con, "SELECT * FROM mafter")
+    errs += _compare(
+        "merge_upsert_changes",
+        lake.table_changes("mt", v_up, v_up).select("k", "v", "_change_type"),
         con,
-        """SELECT b.k, COALESCE(s.v, b.v) AS v FROM mbase b
-           LEFT JOIN msrc s USING (k)
-           UNION ALL
-           SELECT s.k, s.v FROM msrc s WHERE s.k NOT IN (SELECT k FROM mbase)""",
+        f"""SELECT b.k, b.v, 'update_preimage' AS _change_type
+            FROM mbase b JOIN msrc s USING (k)
+            UNION ALL SELECT b.k, s.v, 'update_postimage'
+            FROM mbase b JOIN msrc s USING (k)
+            UNION ALL SELECT k, v, 'insert' FROM ({new_rows})""",
     )
     # second round: delete the matched half
-    del_keys = [(int(x),) for x in sk[: src_n // 2]]
+    del_keys = [(k,) for k in sk[: len(sk) // 2]]
     merge(
         lake, "mt",
         spark.createDataFrame(del_keys, "k bigint"),
@@ -347,12 +370,7 @@ def check_merge(spark, con, rng, tmp) -> list[str]:
         "merge_delete",
         lake.table("mt"),
         con,
-        """WITH after AS (
-             SELECT b.k, COALESCE(s.v, b.v) AS v FROM mbase b
-             LEFT JOIN msrc s USING (k)
-             UNION ALL
-             SELECT s.k, s.v FROM msrc s WHERE s.k NOT IN (SELECT k FROM mbase))
-           SELECT k, v FROM after WHERE k NOT IN (SELECT k FROM mdel)""",
+        "SELECT k, v FROM mafter WHERE k IS NULL OR k NOT IN (SELECT k FROM mdel)",
     )
     return errs
 
