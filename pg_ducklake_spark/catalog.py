@@ -24,6 +24,7 @@ log) is the standard growth valve and slots in behind ``replay``.
 
 from __future__ import annotations
 
+import dataclasses
 import datetime as dt
 import json
 import os
@@ -257,6 +258,23 @@ class TableState:
                 col = old
         return col
 
+    def added_at(self, col: str) -> int:
+        """First snapshot at which current-schema column ``col`` appeared:
+        walk the schema log newest→oldest, following the column through
+        renames (its physical name at each log vintage); the oldest
+        contiguous entry containing it is its add. A DROP-then-re-ADDed
+        name is dated by its own add, not by the column that carried it
+        before, so files older than that read it as NULL or its
+        initial_default, never as the dropped column's bytes."""
+        added = 0
+        for sid, sj in reversed(self.schema_log):
+            pname = self.physical_name(col, sid)
+            if any(fd["name"] == pname for fd in sj["fields"]):
+                added = sid
+            else:
+                break
+        return added
+
     def schema_at(self, snapshot_id: int) -> T.StructType:
         cur = None
         for sid, sj in self.schema_log:
@@ -265,6 +283,26 @@ class TableState:
         if cur is None:
             raise SnapshotNotFoundError(f"no schema at snapshot {snapshot_id}")
         return T.StructType.fromJson(cur)
+
+
+def _fork(state: TableState) -> TableState:
+    """A copy of ``state`` whose containers ``SnapshotLog._apply`` may
+    mutate without touching ``state``. The values it only replaces
+    (FileEntry, SnapshotInfo, DV and inline-row dicts) are shared."""
+    return dataclasses.replace(
+        state,
+        files=dict(state.files),
+        dvs=dict(state.dvs),
+        inline_rows=list(state.inline_rows),
+        options=dict(state.options),
+        tags=dict(state.tags),
+        column_tags={k: dict(v) for k, v in state.column_tags.items()},
+        views=dict(state.views),
+        macros=dict(state.macros),
+        history=list(state.history),
+        schema_log=list(state.schema_log),
+        renames=list(state.renames),
+    )
 
 
 CHECKPOINT_EVERY = 32
@@ -600,8 +638,14 @@ class SnapshotLog:
             else:
                 self._replay_unresolved = []
                 state = self._cache
-                for v in range(self._cache_version + 1, latest + 1):
-                    self._apply(state, self.read_snapshot(v))
+                if self._cache_version < latest:
+                    # Advance a copy: a state handed out earlier (a DML
+                    # op's base, its base_dvs fingerprint) must not move
+                    # under its holder.
+                    state = _fork(state)
+                    for v in range(self._cache_version + 1, latest + 1):
+                        self._apply(state, self.read_snapshot(v))
+                    self._cache = state
                 self._cache_version = latest
                 self._cache_unresolved.extend(self._replay_unresolved)
             return state

@@ -26,6 +26,7 @@ from pyspark.sql import types as T
 
 from pg_ducklake_spark.catalog import from_json_value
 from pg_ducklake_spark.errors import SnapshotNotFoundError
+from pg_ducklake_spark.lake import _local_df
 
 if TYPE_CHECKING:
     from pg_ducklake_spark.lake import Lake
@@ -71,7 +72,6 @@ def table_changes(lake: "Lake", name: str, start, end=None) -> DataFrame:
         ]
     )
     parts: list[DataFrame] = []
-    empty = lake.spark.createDataFrame([], out_schema)
 
     current_names = tuple(f.name for f in schema.fields)
 
@@ -183,10 +183,10 @@ def table_changes(lake: "Lake", name: str, start, end=None) -> DataFrame:
             cdf_schema = T.StructType(
                 list(schema.fields) + [T.StructField("_change_type", T.StringType())]
             )
-            parts.append(stamp(lake.spark.createDataFrame(data, schema=cdf_schema)))
+            parts.append(stamp(_local_df(lake.spark, data, cdf_schema)))
 
     if not parts:
-        return empty
+        return _local_df(lake.spark, [], out_schema)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

@@ -617,8 +617,10 @@ class FrozenLake:
             raise TableNotFoundError(f"table {name!r} not in frozen lake")
         info = self._tables[name]
         renames = info.get("renames") or []
+        cols = self._schema(name)
 
         class _Shim:
+            schema = cols
             files = {
                 p: FileEntry(
                     path=p,
@@ -638,6 +640,13 @@ class FrozenLake:
                         col = old_n
                 return col
 
+            @staticmethod
+            def added_at(col: str) -> int:
+                # Frozen add snapshots are kept for defaulted columns,
+                # the ones the scan fills in older files.
+                return adds.get(col, 0)
+
+        adds = {c: bs for c, _ty, _nl, bs, _d in info["cols"]}
         return _prune(_Shim(), where)
 
     def scan(
@@ -655,6 +664,8 @@ class FrozenLake:
         self, name: str, _rels: set | None = None, with_rowid: bool = False
     ) -> DataFrame:
         from pyspark.sql import functions as F
+
+        from pg_ducklake_spark.lake import _local_df
 
         if name not in self._tables:
             raise TableNotFoundError(f"table {name!r} not in frozen lake")
@@ -766,7 +777,7 @@ class FrozenLake:
             for p in parts[1:]:
                 df = df.unionByName(p)
         else:
-            df = self.spark.createDataFrame([], schema)
+            df = _local_df(self.spark, [], schema)
             if need_meta:
                 df = df.withColumn(
                     "_fp", F.lit(None).cast("string")
@@ -793,8 +804,10 @@ class FrozenLake:
                         "embeds no deleted positions; the frozen file is "
                         "inconsistent (re-freeze the source lake)"
                     )
-                dv = self.spark.createDataFrame(
-                    [(f, int(ri)) for f, ri in info["dv_rows"]], dv_schema
+                dv = _local_df(
+                    self.spark,
+                    [(f, int(ri)) for f, ri in info["dv_rows"]],
+                    dv_schema,
                 )
             else:  # pre-embedding frozen files: read the DV parquet
                 dv_paths = sorted(
@@ -819,8 +832,12 @@ class FrozenLake:
                 (f"file:{self.data_root}/{p}", info["rid_starts"].get(p))
                 for p, _bs in info["files"]
             ]
-            sdf = self.spark.createDataFrame(
-                starts, "_fp string, _dl_start long"
+            sdf = _local_df(
+                self.spark, starts,
+                T.StructType([
+                    T.StructField("_fp", T.StringType()),
+                    T.StructField("_dl_start", T.LongType()),
+                ]),
             )
             df = (
                 df.join(F.broadcast(sdf), "_fp", "left")  # bcast-ok: one row per data file (metadata-sized)
@@ -848,9 +865,7 @@ class FrozenLake:
                     list(schema.fields)
                     + [T3.StructField("rowid", T3.LongType())]
                 )
-            df = df.unionByName(
-                self.spark.createDataFrame(data, schema=inline_schema)
-            )
+            df = df.unionByName(_local_df(self.spark, data, inline_schema))
         return df
 
     def views(self) -> dict:

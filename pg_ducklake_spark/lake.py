@@ -22,6 +22,7 @@ never row data — so nothing here collapses at 100 TB.
 from __future__ import annotations
 
 import datetime as dt
+import decimal
 import json
 import math
 import os
@@ -57,6 +58,7 @@ from pg_ducklake_spark.errors import (
     TableAlreadyExistsError,
     TableNotFoundError,
 )
+from pg_ducklake_spark.operators.pruning import prune_files
 
 _TRANSFORM_RE = re.compile(r"^(year|month|day|hour)\s*\(\s*(\w+)\s*\)$", re.I)
 _BUCKET_RE = re.compile(r"^bucket\s*\(\s*(\d+)\s*,\s*(\w+)\s*\)$", re.I)
@@ -402,6 +404,84 @@ def _sub_outside_quotes(
         return repl(m)
 
     return pattern.sub(guarded, sql)
+
+
+# Types whose Python values PySpark converts through ``toInternal`` (an
+# integer) before they reach the JVM. TIME exists from Spark 4.0.
+_INTERNAL_INT_TYPES = tuple(
+    t
+    for t in (
+        T.DateType, T.TimestampType, T.TimestampNTZType,
+        T.DayTimeIntervalType, getattr(T, "TimeType", None),
+    )
+    if t is not None
+)
+# Spark rounds a decimal into its column type HALF_UP
+# (``Decimal.set(BigDecimal, precision, scale)``); the precision only
+# has to hold decimal(38, s).
+_DECIMAL_CTX = decimal.Context(prec=80, rounding=decimal.ROUND_HALF_UP)
+
+
+def _arrow_value(v: Any, dtype: T.DataType) -> Any:
+    """``v`` as ``createDataFrame(list)`` hands it to the JVM."""
+    if v is None:
+        return None
+    if isinstance(dtype, _INTERNAL_INT_TYPES):
+        # A naive TimestampType value resolves in the process-local
+        # time zone here, exactly as on the list path.
+        return dtype.toInternal(v)
+    if isinstance(dtype, T.DecimalType):
+        return _DECIMAL_CTX.quantize(
+            decimal.Decimal(v), decimal.Decimal(1).scaleb(-dtype.scale)
+        )
+    if isinstance(dtype, T.ArrayType):
+        return [_arrow_value(x, dtype.elementType) for x in v]
+    return v
+
+
+def _arrow_storage_type(dtype: T.DataType):
+    """Arrow type that holds ``_arrow_value`` output for ``dtype``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    if isinstance(dtype, T.DateType):
+        return pa.int32()
+    if isinstance(dtype, _INTERNAL_INT_TYPES):
+        return pa.int64()
+    if isinstance(dtype, T.ArrayType):
+        return pa.list_(_arrow_storage_type(dtype.elementType))
+    return to_arrow_type(dtype)
+
+
+def _local_df(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType
+) -> DataFrame:
+    """Driver-side rows as an Arrow-backed ``LocalRelation``.
+
+    ``createDataFrame(list)`` plans a pickled Python-RDD scan, which
+    runs a Python worker for every partition on every execution of
+    every query over it. ``createDataFrame(pyarrow.Table)`` ships the
+    rows to the JVM once and plans a ``LocalRelation``: no job, no
+    worker. This branch does not read
+    ``spark.sql.execution.arrow.pyspark.enabled``, so a stock session
+    gets it too. Values are converted the way the list path converts
+    them, so both collect equal. Struct, map and variant values are
+    not handled (they are never inlined)."""
+    import pyarrow as pa
+
+    # createDataFrame casts the integer columns to their Arrow
+    # temporal types (timestamps as UTC instants, left unshifted).
+    table = pa.Table.from_arrays(
+        [
+            pa.array(
+                [_arrow_value(r[i], f.dataType) for r in rows],
+                type=_arrow_storage_type(f.dataType),
+            )
+            for i, f in enumerate(schema.fields)
+        ],
+        names=schema.names,
+    )
+    return spark.createDataFrame(table, schema=schema)
 
 
 class Lake:
@@ -1420,6 +1500,9 @@ class Lake:
                 }
             )
             return len(rows)
+        # User rows of any type (struct, map, variant included): the
+        # list path's conversion and checks apply. This frame is read
+        # once, by the insert's write, so its Python-RDD scan runs once.
         df = self.spark.createDataFrame(
             [Row(**r) for r in rows], schema=state.schema
         )
@@ -1464,7 +1547,9 @@ class Lake:
         rename mapping AND initial-default fills applied — the single
         authority every inline consumer (scan, predicate match, DML
         rewrite) must go through. ``with_row_id`` appends
-        ``_dl_row_id`` for consumers that need to address rows."""
+        ``_dl_row_id`` for consumers that need to address rows. The
+        buffer is built by ``_local_df``: an Arrow-backed
+        ``LocalRelation``, so a read over it starts no Python worker."""
         if not state.inline_rows:
             return None
         data = []
@@ -1490,7 +1575,7 @@ class Lake:
                 T.StructField("_dl_row_id", T.LongType(), False),
             ]
         )
-        df = self.spark.createDataFrame(data, schema=aug)
+        df = _local_df(self.spark, data, aug)
         for c, (add_snap, expr) in self._initial_defaults(state, schema).items():
             df = df.withColumn(
                 c,
@@ -1528,22 +1613,14 @@ class Lake:
         """col -> (snapshot the column first appeared at, initial_default
         SQL expr) for every schema field carrying an initial_default.
 
-        The add snapshot follows the LOGICAL column (newest→oldest walk
-        through renames), so a re-ADDed name is dated by its own add,
-        not a dropped predecessor's."""
+        The add snapshot follows the LOGICAL column
+        (``TableState.added_at``), so a re-ADDed name is dated by its own
+        add, not a dropped predecessor's."""
         out: dict[str, tuple[int, str]] = {}
         for f in schema.fields:
             d = (f.metadata or {}).get("initial_default")
-            if d is None:
-                continue
-            add_snap = 0
-            for sid, sj in reversed(state.schema_log):
-                pname = state.physical_name(f.name, sid)
-                if any(fd["name"] == pname for fd in sj["fields"]):
-                    add_snap = sid
-                else:
-                    break
-            out[f.name] = (add_snap, d)
+            if d is not None:
+                out[f.name] = (state.added_at(f.name), d)
         return out
 
     def _read_files(
@@ -1567,7 +1644,7 @@ class Lake:
         full_scan = rels is None
         rels = sorted(state.files) if rels is None else sorted(rels)
         if not rels:
-            df = self.spark.createDataFrame([], schema)
+            df = _local_df(self.spark, [], schema)
             if keep_meta:
                 df = df.withColumn("_dl_fp", F.lit(None).cast("string")).withColumn(
                     "_dl_ri", F.lit(None).cast("long")
@@ -1580,24 +1657,7 @@ class Lake:
         # columns they're missing (group count ≤ #ADD COLUMN DEFAULTs + 1,
         # independent of file count) and fill per group.
         current_names = tuple(f.name for f in schema.fields)
-
-        def _added_at(c: str) -> int:
-            # First snapshot at which the current LOGICAL column `c`
-            # appeared: walk the schema log newest→oldest, following
-            # the column through renames (physical name at each log
-            # vintage); the oldest contiguous entry containing it is
-            # its add. Distinguishes a DROP-then-re-ADDed name from
-            # the column that originally carried it.
-            added = 0
-            for sid, sj in reversed(state.schema_log):
-                pname = state.physical_name(c, sid)
-                if any(fd["name"] == pname for fd in sj["fields"]):
-                    added = sid
-                else:
-                    break
-            return added
-
-        add_snaps = {c: _added_at(c) for c in current_names}
+        add_snaps = {c: state.added_at(c) for c in current_names}
         groups: dict[tuple, list[str]] = {}
         for rel in rels:
             bs = state.files[rel].begin_snapshot
@@ -1780,10 +1840,10 @@ class Lake:
             # scan's DV'd files) instead of the (path-string, long)
             # pair: the string-keyed form broadcast a ~100-byte path
             # per deleted position and hashed a path string per probe
-            # row. The file→fid map is a literal VALUES LocalRelation,
-            # NOT createDataFrame — the latter plans as a Python-RDD
-            # scan that pays a Python-worker round trip on every
-            # execution. Together with the clean-file split: 2.3 s →
+            # row. The file→fid maps are `_local_df` LocalRelations,
+            # never createDataFrame(list), whose Python-RDD scan pays a
+            # Python-worker round trip on every execution. Together
+            # with the clean-file split: 2.3 s →
             # ~0.7 s for count+sum over 10M rows with 5% deleted;
             # the size-keyed resolve (r11b, see size_ok above) takes
             # the same scan to ~0.5 s.
@@ -1806,13 +1866,11 @@ class Lake:
                 cacheable = full_scan and not _log.has_unresolved()
                 ckey = (self._canon(name), state.snapshot_id, _log.epoch)
                 dvk = self._dv_key_cache.get(ckey) if cacheable else None
+                fid = T.StructField("_dl_fid", T.LongType(), False)
                 if dvk is None:
-                    relvals = ", ".join(
-                        "('{0}', {1}L)".format(rel.replace("'", "''"), i)
-                        for i, rel in enumerate(fids)
-                    )
-                    relmap = self.spark.sql(
-                        f"SELECT * FROM VALUES {relvals} AS t(file, _dl_fid)"
+                    relmap = _local_df(
+                        self.spark, [(rel, i) for i, rel in enumerate(fids)],
+                        T.StructType([T.StructField("file", T.StringType()), fid]),
                     )
                     dvk = (
                         dv.join(F.broadcast(relmap), "file")  # bcast-ok: one row per data file (metadata-sized)
@@ -1833,13 +1891,10 @@ class Lake:
                                 pass
                         self._dv_key_cache[ckey] = dvk
                 if size_ok:
-                    szvals = ", ".join(
-                        f"({sizes[rel]}L, {i}L)"
-                        for i, rel in enumerate(fids)
-                    )
-                    szmap = self.spark.sql(
-                        f"SELECT * FROM VALUES {szvals}"
-                        " AS t(_dl_sz, _dl_fid)"
+                    szmap = _local_df(
+                        self.spark,
+                        [(sizes[rel], i) for i, rel in enumerate(fids)],
+                        T.StructType([T.StructField("_dl_sz", T.LongType()), fid]),
                     )
                     masked = (
                         masked.join(F.broadcast(szmap), "_dl_sz", "left")  # bcast-ok: one row per data file (metadata-sized)
@@ -1851,17 +1906,10 @@ class Lake:
                         .drop("_dl_fid", "_dl_key", "_dl_sz")
                     )
                 else:
-                    fpvals = ", ".join(
-                        "('file:{1}/{0}', {2}L)".format(
-                            rel.replace("'", "''"),
-                            table_dir.replace("'", "''"),
-                            i,
-                        )
-                        for i, rel in enumerate(fids)
-                    )
-                    fmap = self.spark.sql(
-                        f"SELECT * FROM VALUES {fpvals}"
-                        " AS t(_dl_fp, _dl_fid)"
+                    fmap = _local_df(
+                        self.spark,
+                        [(f"file:{table_dir}/{rel}", i) for i, rel in enumerate(fids)],
+                        T.StructType([T.StructField("_dl_fp", T.StringType()), fid]),
                     )
                     masked = (
                         masked.join(F.broadcast(fmap), "_dl_fp", "left")  # bcast-ok: one row per data file (metadata-sized)
@@ -1925,8 +1973,12 @@ class Lake:
             (f"file:{table_dir}/{rel}", fe.row_id_start)
             for rel, fe in state.files.items()
         ]
-        sdf = self.spark.createDataFrame(
-            starts, "_dl_fp string, _dl_start long"
+        sdf = _local_df(
+            self.spark, starts,
+            T.StructType([
+                T.StructField("_dl_fp", T.StringType()),
+                T.StructField("_dl_start", T.LongType()),
+            ]),
         )
         return (
             df.join(F.broadcast(sdf), "_dl_fp", "left")  # bcast-ok: one row per data file (metadata-sized)
@@ -2019,8 +2071,6 @@ class Lake:
         schema = state.schema_at(state.snapshot_id)
         if where is None:
             return self.table(name, with_rowid=with_rowid, **tt)
-        from pg_ducklake_spark.operators.pruning import prune_files
-
         keep = prune_files(state, where)
         if with_rowid:
             if "rowid" in {f.name for f in schema.fields}:
@@ -2185,14 +2235,18 @@ class Lake:
         return os.path.relpath(p, table_dir)
 
     def _match_files(
-        self, name: str, state: TableState, pred: Column
+        self, name: str, state: TableState, where: str, pred: Column
     ) -> tuple[dict[str, int], int]:
         """One scan: which live files contain predicate matches, and how
         many rows match per file (gives DML row counts without a second
-        job). DV-subtracted, so already-deleted positions never match."""
-        if not state.files:
+        job). DV-subtracted, so already-deleted positions never match;
+        only the files ``where``'s stats cannot rule out are read."""
+        rels = prune_files(state, where)
+        if not rels:
             return {}, 0
-        df = self._read_files(name, state, state.schema, keep_meta=True)
+        df = self._read_files(
+            name, state, state.schema, rels=rels, keep_meta=True
+        )
         table_dir = self._table_dir(name)
         hits = df.filter(pred).groupBy("_dl_fp").count().collect()
         counts = {self._uri_to_rel(table_dir, r["_dl_fp"]): r["count"] for r in hits}
@@ -2249,8 +2303,11 @@ class Lake:
         matched = None
         file_counts: dict[str, int] = {}
         dv_rel: str | None = None
-        if state.files:
-            scan = self._read_files(name, state, schema, keep_meta=True)
+        rels = prune_files(state, where)
+        if rels:
+            scan = self._read_files(
+                name, state, schema, rels=rels, keep_meta=True
+            )
             if mode == "dv":
                 dv_rel = f"_dv/{uuid.uuid4().hex}"
                 rel_expr = F.expr(
@@ -2399,7 +2456,9 @@ class Lake:
         pred = F.expr(where)
         table_dir = self._table_dir(name)
 
-        file_counts, n_files_matched = self._match_files(name, state, pred)
+        file_counts, n_files_matched = self._match_files(
+            name, state, where, pred
+        )
         inline_ids = self._match_inline(state, pred, schema)
         n = n_files_matched + len(inline_ids)
         if n == 0:
@@ -2462,12 +2521,10 @@ class Lake:
                 ).collect()
                 if r["_dl_row_id"] in keep_ids
             ]
-            old_df = self.spark.createDataFrame(
-                [
-                    tuple(r[f.name] for f in schema.fields)
-                    for r in buf_rows
-                ],
-                schema=schema,
+            old_df = _local_df(
+                self.spark,
+                [tuple(r[f.name] for f in schema.fields) for r in buf_rows],
+                schema,
             )
             updated = self._enforce_not_null(schema, apply_set(old_df)).collect()
             for old, new in zip(buf_rows, updated):

@@ -222,19 +222,7 @@ class LakeCDFStreamReader(DataSourceStreamReader):
         schema_v = T.StructType(self.data_fields)
         names = [f.name for f in schema_v.fields]
 
-        def added_at(c: str) -> int:
-            # First snapshot the current logical column appeared at
-            # (same newest→oldest walk as Lake._read_files).
-            added = 0
-            for sid, sj in reversed(state.schema_log):
-                pname = state.physical_name(c, sid)
-                if any(fd["name"] == pname for fd in sj["fields"]):
-                    added = sid
-                else:
-                    break
-            return added
-
-        add_snaps = {f.name: added_at(f.name) for f in schema_v.fields}
+        add_snaps = {f.name: state.added_at(f.name) for f in schema_v.fields}
         # getActiveSession is thread-local and the micro-batch planner
         # runs on the streaming thread — getOrCreate returns the
         # existing session from any thread.

@@ -79,3 +79,30 @@ def test_mixed_inline_and_file_dml(spark, lake):
 def test_require_commit_message_option_surfaced(t):
     t.set_option("require_commit_message", True, table="t")
     assert t.options("t")["require_commit_message"] is True
+
+
+def test_state_held_across_commit_is_stable(spark, lake):
+    """A replayed state never changes under its holder: the next latest
+    replay advances a copy, so a DML op's base state (and the
+    ``base_dvs`` fingerprint taken from it) stays what it read."""
+    lake.create_table("t", "a int", options={"data_inlining_row_limit": 10})
+    lake.insert("t", spark.createDataFrame([(1,), (2,)], "a int").coalesce(1))
+    lake.insert_rows("t", [{"a": 3}])
+    lake.delete("t", "a = 1")
+    state = lake._state("t")
+    before = (
+        state.snapshot_id,
+        dict(state.files),
+        {k: dict(v) for k, v in state.dvs.items()},
+        list(state.inline_rows),
+    )
+    assert before[2] and before[3]
+    lake.delete("t", "a = 2")
+    lake.insert_rows("t", [{"a": 4}])
+    lake.insert("t", spark.createDataFrame([(5,)], "a int"))
+    later = lake._state("t")
+    assert later.snapshot_id == before[0] + 3
+    assert later.dvs != before[2] and len(later.inline_rows) == 2
+    assert (
+        state.snapshot_id, state.files, state.dvs, state.inline_rows
+    ) == before

@@ -78,3 +78,50 @@ def test_tagged_rebalance_queries_on_stock_session():
     )
     for name in PLAIN_SESSION_SAMPLE:
         assert f"PLAIN_OK {name}" in proc.stdout, f"{name} did not complete"
+
+
+_LAKE_SCRIPT = """
+import sys, tempfile
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+
+spark = (
+    SparkSession.builder.appName("plain_session_lake")
+    .master("local[2]")
+    .getOrCreate()
+)
+from pg_ducklake_spark import Lake
+
+lake = Lake(spark, tempfile.mkdtemp() + "/lake")
+lake.create_table("t", "a bigint, s string",
+                  options={{"data_inlining_row_limit": 10}})
+lake.insert("t", spark.createDataFrame([(1, "f")], "a bigint, s string"))
+lake.insert_rows("t", [{{"a": 2, "s": "x"}}, {{"a": 3, "s": None}}])
+frames = {{
+    "table": lake.table("t"),
+    "changes": lake.table_changes("t", 1, lake.current_snapshot("t")),
+}}
+for what, df in frames.items():
+    plan = df._jdf.queryExecution().analyzed().toString()
+    assert "LogicalRDD" not in plan, (what, plan)
+    print("PLAIN_LAKE", what, sorted(r.a for r in df.collect()), flush=True)
+spark.stop()
+"""
+
+
+def test_inline_lake_reads_have_no_python_rdd_on_stock_session():
+    """The Arrow-backed inline buffer does not depend on the Arrow
+    confs ``get_spark`` sets: a stock session plans it as a
+    LocalRelation too."""
+    proc = subprocess.run(
+        [sys.executable, "-c", _LAKE_SCRIPT.format(repo=REPO)],
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, (
+        f"--- stdout ---\n{proc.stdout[-4000:]}\n"
+        f"--- stderr ---\n{proc.stderr[-6000:]}"
+    )
+    assert "PLAIN_LAKE table [1, 2, 3]" in proc.stdout
+    assert "PLAIN_LAKE changes [1, 2, 3]" in proc.stdout

@@ -34,14 +34,25 @@ DUCK_SCHEMA = "id BIGINT, grp VARCHAR, val BIGINT"
 GROUPS = ["a", "b", "c", "d", "e"]
 
 
-def _preds(rng: random.Random):
-    kind = rng.randrange(4)
+def _preds(rng: random.Random, next_id: int):
+    """A random DML predicate. The BETWEEN and top-level-OR shapes
+    exercise file pruning (operators/pruning.py); DuckDB gives OR the
+    same precedence, so the mirror referees the pruned match."""
+    kind = rng.randrange(6)
     if kind == 0:
         return f"grp = '{rng.choice(GROUPS)}'"
     if kind == 1:
         return f"id % {rng.randint(2, 7)} = {rng.randint(0, 1)}"
     if kind == 2:
         return f"val > {rng.randint(0, 900)}"
+    if kind == 3:
+        lo = rng.randint(0, max(next_id, 1))
+        return f"id BETWEEN {lo} AND {lo + rng.randint(0, 12)}"
+    if kind == 4:
+        return (
+            f"grp = '{rng.choice(GROUPS)}' AND val <= {rng.randint(100, 900)}"
+            f" OR id < {rng.randint(0, max(next_id, 1))}"
+        )
     return (
         f"grp = '{rng.choice(GROUPS)}' AND val <= {rng.randint(100, 900)}"
     )
@@ -170,12 +181,12 @@ def run(ops: int, seed: int, spark=None) -> list[str]:
                     )
                 )
             elif op == "update":
-                pred = _preds(rng)
+                pred = _preds(rng, next_id)
                 delta = rng.randint(1, 50)
                 lake.update("f", {"val": f"val + {delta}"}, pred)
                 mirror.apply(f"UPDATE f SET val = val + {delta} WHERE {pred}")
             elif op == "delete":
-                pred = _preds(rng)
+                pred = _preds(rng, next_id)
                 lake.delete("f", pred)
                 mirror.apply(f"DELETE FROM f WHERE {pred}")
             elif op == "merge":
