@@ -230,7 +230,7 @@ def _derive_dv_deletions(
         name, prior, schema_v, rels=files, keep_meta=True
     )
     pos = delta.select(
-        F.concat(F.lit(f"file:{table_dir}/"), F.col("file")).alias("_dl_fp"),
+        lake._uri_col(table_dir, files, "file").alias("_dl_fp"),
         F.col("row_index").alias("_dl_ri"),
     )
     deleted = rows.join(

@@ -160,15 +160,14 @@ def freeze_lake(lake: "Lake", out_path: str) -> None:
             "INSERT INTO ducklake_table VALUES (?, ?, ?, true, ?, ?)",
             [tid, bare, relpath, state.snapshot_id, schema_ids[schema_name]],
         )
-        from pg_ducklake_spark.lake import Lake as _Lake
-
-        defaults = _Lake._initial_defaults(state, state.schema)
         for order, f in enumerate(state.schema.fields):
             meta = f.metadata or {}
+            # begin_snapshot = the logical column's ADD (TableState.added_at):
+            # files written before it never hold this column's bytes.
             con.execute(
                 "INSERT INTO ducklake_column VALUES (?, ?, ?, ?, ?, ?, ?, ?)",
                 [tid, order, f.name, f.dataType.simpleString(), f.nullable,
-                 defaults.get(f.name, (0, None))[0],
+                 state.added_at(f.name),
                  meta.get("initial_default"), meta.get("default_value")],
             )
         prev_schema_version = None
@@ -642,8 +641,6 @@ class FrozenLake:
 
             @staticmethod
             def added_at(col: str) -> int:
-                # Frozen add snapshots are kept for defaulted columns,
-                # the ones the scan fills in older files.
                 return adds.get(col, 0)
 
         adds = {c: bs for c, _ty, _nl, bs, _d in info["cols"]}
@@ -665,7 +662,7 @@ class FrozenLake:
     ) -> DataFrame:
         from pyspark.sql import functions as F
 
-        from pg_ducklake_spark.lake import _local_df
+        from pg_ducklake_spark.lake import Lake, _local_df
 
         if name not in self._tables:
             raise TableNotFoundError(f"table {name!r} not in frozen lake")
@@ -710,12 +707,18 @@ class FrozenLake:
             return col
 
         current_names = tuple(f.name for f in schema.fields)
+        adds = {c: bs for c, _ty, _nl, bs, _d in info["cols"]}
         groups: dict[tuple, list[str]] = {}
         for path, file_bs in info["files"]:
             missing = tuple(
                 c for c, (add_bs, _d) in fills.items() if file_bs < add_bs
             )
-            phys = tuple(physical_name(c, file_bs) for c in current_names)
+            # A column added after the file maps to None: the file may
+            # hold a dropped column of the same name (as in Lake._read_files).
+            phys = tuple(
+                physical_name(c, file_bs) if adds[c] <= file_bs else None
+                for c in current_names
+            )
             groups.setdefault((missing, phys), []).append(path)
         has_dvs = bool(info.get("dvs"))
         need_meta = has_dvs or with_rowid
@@ -739,11 +742,12 @@ class FrozenLake:
                 from pyspark.sql import types as T2
 
                 claimed = {
-                    p for c, p in zip(current_names, phys) if p != c
+                    p for c, p in zip(current_names, phys)
+                    if p is not None and p != c
                 }
                 read_fields, aliases = [], []
                 for f, p in zip(schema.fields, phys):
-                    if p == f.name and p in claimed:
+                    if p is None or (p == f.name and p in claimed):
                         aliases.append((None, f))
                         continue
                     read_fields.append(T2.StructField(p, f.dataType, True))
@@ -819,8 +823,8 @@ class FrozenLake:
                     .filter(F.col("file").isin([f for f, _p in info["dvs"]]))
                 )
             dv = dv.select(
-                F.concat(
-                    F.lit(f"file:{self.data_root}/{name}/"), F.col("file")
+                Lake._uri_col(
+                    f"{self.data_root}/{name}", [f for f, _p in info["dvs"]], "file"
                 ).alias("_fp"),
                 F.col("row_index").alias("_ri"),
             )
@@ -829,7 +833,7 @@ class FrozenLake:
             # rowid = frozen row_id_start + parquet row_index (the same
             # metadata-sized broadcast map Lake._attach_rowid uses).
             starts = [
-                (f"file:{self.data_root}/{p}", info["rid_starts"].get(p))
+                (Lake._file_uri(f"{self.data_root}/{p}"), info["rid_starts"].get(p))
                 for p, _bs in info["files"]
             ]
             sdf = _local_df(

@@ -28,6 +28,7 @@ import math
 import os
 import re
 import shutil
+import unicodedata
 import urllib.parse
 import uuid
 from typing import Any, Callable, Iterable
@@ -1908,7 +1909,10 @@ class Lake:
                 else:
                     fmap = _local_df(
                         self.spark,
-                        [(f"file:{table_dir}/{rel}", i) for i, rel in enumerate(fids)],
+                        [
+                            (self._file_uri(f"{table_dir}/{rel}"), i)
+                            for i, rel in enumerate(fids)
+                        ],
                         T.StructType([T.StructField("_dl_fp", T.StringType()), fid]),
                     )
                     masked = (
@@ -1922,9 +1926,7 @@ class Lake:
                     )
             else:  # >8M DV'd files in one scan: packed fid overflows
                 dvp = dv.select(
-                    F.concat(
-                        F.lit(f"file:{table_dir}/"), F.col("file")
-                    ).alias("_dl_fp"),
+                    self._uri_col(table_dir, fids, "file").alias("_dl_fp"),
                     F.col("row_index").alias("_dl_ri"),
                 )
                 masked = masked.join(
@@ -1970,7 +1972,7 @@ class Lake:
         join costs what the planner's own file listing already costs."""
         table_dir = self._table_dir(name)
         starts = [
-            (f"file:{table_dir}/{rel}", fe.row_id_start)
+            (self._file_uri(f"{table_dir}/{rel}"), fe.row_id_start)
             for rel, fe in state.files.items()
         ]
         sdf = _local_df(
@@ -2230,9 +2232,58 @@ class Lake:
 
     # ------------------------------------------------------------- DML
 
+    # Besides ASCII letters and digits, the characters java.net.URI
+    # leaves unquoted in a path.
+    _URI_SAFE = frozenset("/@_-!.~'()*,;:$&+=")
+
+    @classmethod
+    def _file_uri(cls, path: str) -> str:
+        """The URI Spark reports as ``_metadata.file_path`` for the local
+        file ``path``: ``file:`` plus the path quoted the way
+        java.net.URI quotes one (Hadoop's ``Path.toUri``). Every
+        character except ASCII letters and digits, ``_URI_SAFE`` and
+        non-ASCII characters that are neither controls nor spaces
+        becomes ``%XX`` of its UTF-8 bytes — ``%`` included, so a
+        Hive-escaped partition directory ``s=c%25d`` reads back as
+        ``s=c%2525d``. :meth:`_uri_to_rel` is the inverse."""
+        out = []
+        for c in path:
+            if c.isascii():
+                keep = c.isalnum() or c in cls._URI_SAFE
+            else:
+                keep = unicodedata.category(c) not in ("Cc", "Zs", "Zl", "Zp")
+            out.append(c if keep else "".join(f"%{b:02X}" for b in c.encode()))
+        return "file:" + "".join(out)
+
     def _uri_to_rel(self, table_dir: str, uri: str) -> str:
         p = urllib.parse.unquote(urllib.parse.urlparse(uri).path)
         return os.path.relpath(p, table_dir)
+
+    @classmethod
+    def _uri_col(
+        cls, table_dir: str, rels: Iterable[str], col: str, to_uri: bool = True
+    ) -> Column:
+        """Column ``col`` mapped from paths relative to ``table_dir``
+        (all among ``rels``) to their :meth:`_file_uri`, or back with
+        ``to_uri=False``. A path whose URI is not the quoted prefix plus
+        the path itself (a partition value or name that needs quoting)
+        goes through a literal map; every other path is a plain concat
+        or substring."""
+        prefix = cls._file_uri(f"{table_dir}/")
+        n = len(prefix)
+        odd = [
+            (r, q) for r in rels
+            if (q := cls._file_uri(f"{table_dir}/{r}")[n:]) != r
+        ]
+        if to_uri:
+            tail = F.col(col)
+        else:
+            tail = F.expr(f"substring({col}, {n + 1})")
+            odd = [(q, r) for r, q in odd]
+        if odd:
+            lookup = F.create_map(*[F.lit(x) for pair in odd for x in pair])
+            tail = F.coalesce(F.try_element_at(lookup, tail), tail)
+        return F.concat(F.lit(prefix), tail) if to_uri else tail
 
     def _match_files(
         self, name: str, state: TableState, where: str, pred: Column
@@ -2310,11 +2361,9 @@ class Lake:
             )
             if mode == "dv":
                 dv_rel = f"_dv/{uuid.uuid4().hex}"
-                rel_expr = F.expr(
-                    f"substring(_dl_fp, {len(f'file:{table_dir}/') + 1})"
-                )
                 scan.filter(pred).select(
-                    rel_expr.alias("file"),
+                    self._uri_col(table_dir, rels, "_dl_fp", to_uri=False)
+                    .alias("file"),
                     F.col("_dl_ri").alias("row_index"),
                 ).write.parquet(os.path.join(table_dir, dv_rel))
                 written = self.spark.read.schema(self._DV_SCHEMA).parquet(

@@ -1,5 +1,6 @@
-"""Reusable deduplication operators (parameterized library surface; the
-oracle-verified fixed-shape variants live in plans/dedup.py).
+"""Deduplication operators: the parameterized library surface that the
+oracle-verified plans in plans/dedup.py, plans/graph.py,
+plans/curation.py and plans/pipeline.py call with fixed arguments.
 
 All candidate generation is equi-join based (shingle / LSH band /
 signature-byte blocking) — no operator here ever cross-joins the corpus,
@@ -8,10 +9,11 @@ so every one survives a 100 TB document table.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pg_ducklake_spark.functions.hashing import h32, minhash_coeffs, minhash_col
+from pg_ducklake_spark.functions.hashing import h32, minhash_coeffs, sql_minhash
+from pg_ducklake_spark.operators import scoped_persist
 
 
 def exact_dedup(df: DataFrame, cols: list[str] | None = None, keep: str = "first",
@@ -34,44 +36,84 @@ def exact_dedup(df: DataFrame, cols: list[str] | None = None, keep: str = "first
     )
 
 
+def posting_pairs(
+    df: DataFrame, key: str | list[str], member: str | Column
+) -> DataFrame:
+    """Every in-group pair ``(a, b)``, ``a < b``, of ``member`` values
+    sharing the same ``key`` — the candidate step of a distributed
+    set-similarity join (Vernica, Carey & Li, SIGMOD 2010).
+
+    ONE shuffle keyed on ``key`` builds each group's sorted posting
+    list; groups of one member emit nothing, so singleton pruning is
+    free. Versus a self-equi-join on ``key`` this drops the mirror join
+    side's exchange and the join stage. The pairs come from two chained
+    generators: posexplode picks the left element, then a slice-explode
+    emits its suffix partners. Spark's Generate operator STREAMS
+    generator output, so per-row memory is O(len(list)) — the n^2 pair
+    volume of a hot key spreads over n streamed rows, never one
+    n^2-element array inside a single row (a stopword shingle would OOM
+    a task under the flatten(transform(...)) formulation). ``member``
+    may be a struct whose first field orders the pair; members must be
+    distinct within a group. Callers that only rename ``a``/``b`` do so
+    in their final projection: a rename right above the generators
+    plans as one more Project node."""
+    keys = [key] if isinstance(key, str) else key
+    return (
+        df.groupBy(*keys)
+        .agg(F.sort_array(F.collect_list(member)).alias("dl"))
+        .filter(F.size("dl") >= 2)
+        .select(F.col("dl"), F.posexplode("dl").alias("i", "a"))
+        .select("a", F.explode(F.expr("slice(dl, i + 2, size(dl))")).alias("b"))
+    )
+
+
+def shingle_sql(n: int = 3) -> str:
+    """SQL for the distinct word n-grams of the token array ``toks``.
+
+    The ELSE branch must be a *typed* empty array — a bare array() is
+    ARRAY<NULL> and the resulting coercion of the THEN branch knocks
+    the whole expression out of whole-stage codegen (~5x slower)."""
+    gram = ", ".join(
+        ["element_at(toks, i)"] + [f"element_at(toks, i + {j})" for j in range(1, n)]
+    )
+    return f"""
+CASE WHEN size(toks) >= {n} THEN
+  array_distinct(transform(sequence(1, size(toks) - {n - 1}),
+    i -> concat_ws(' ', {gram})))
+ELSE CAST(array() AS ARRAY<STRING>) END
+"""
+
+
+def shingle_arrays(
+    df: DataFrame, text_col: str, id_col: str, n: int = 3, keep: tuple[str, ...] = ()
+) -> DataFrame:
+    """(id, *keep, shingles): the distinct word n-grams of the
+    lowercased, single-space-split text, as one array per row."""
+    return df.select(
+        F.col(id_col).alias("id"), *keep, F.split(F.lower(text_col), " ").alias("toks")
+    ).select("id", *keep, F.expr(shingle_sql(n)).alias("shingles"))
+
+
 def shingle(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame:
     """(id, shingle) pairs: distinct word n-grams of the lowercased text."""
-    gram = " , ".join(f"element_at(toks, i + {j})" for j in range(n))
-    expr = f"""
-    CASE WHEN size(toks) >= {n} THEN
-      array_distinct(transform(sequence(1, size(toks) - {n - 1}),
-        i -> concat_ws(' ', {gram})))
-    ELSE CAST(array() AS ARRAY<STRING>) END
-    """
-    toks = df.select(
-        F.col(id_col).alias("id"), F.split(F.lower(text_col), " ").alias("toks")
-    )
+    # explode_outer + notnull, not plain explode: an inner Generate
+    # derives a pushable size(shingles) > 0 pre-filter that re-evaluates
+    # the whole shingle expression per row, interpreted.
     return (
-        toks.select("id", F.explode_outer(F.expr(expr)).alias("shingle"))
+        shingle_arrays(df, text_col, id_col, n)
+        .select("id", F.explode_outer("shingles").alias("shingle"))
         .filter(F.col("shingle").isNotNull())
     )
 
 
 def jaccard_pairs(
-    df: DataFrame, text_col: str, id_col: str, threshold: float = 0.8, n: int = 3,
-    prune_unique: bool = True, max_df: int | None = None,
+    df: DataFrame, text_col: str, id_col: str, threshold: float = 0.8, n: int = 3
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, jaccard ≥ threshold) by word
-    n-gram Jaccard; candidates from grouped shingle posting lists.
-
-    Candidate pairs come from ONE shuffle keyed on shingle: group the
-    posting list per shingle and enumerate in-group pairs directly
-    (``collect_list`` + streamed posexplode/slice generators, so no
-    single row ever holds the quadratic pair array). Versus the
-    classic self-equi-join this removes two exchanges (the join's
-    second side and the separate document-frequency pre-count — a
-    posting list of length 1 simply emits no pairs, so singleton
-    pruning is free and lossless; ``prune_unique`` is kept for API
-    compatibility and is implied). At 100 TB the guard rail is
-    ``max_df``: a stopword shingle's posting list is quadratic under
-    ANY pair-enumeration strategy, so production runs cap it (lossy,
-    the standard trade); the default None keeps exact semantics for
-    oracle comparison."""
+    n-gram Jaccard; candidates from grouped shingle posting lists
+    (:func:`posting_pairs`). A stopword shingle's posting list is
+    quadratic under ANY pair-enumeration strategy; this operator keeps
+    exact semantics and caps nothing."""
     # r12 (guide §2.3/§2.4): per-doc set sizes are the LENGTH of the
     # map-side shingle array — computed before the explode, carried
     # through the posting list as (id, n) structs. Versus the previous
@@ -80,46 +122,26 @@ def jaccard_pairs(
     # exploded shingle table; the postings shuffle carries 8 extra
     # bytes per entry. Results are identical (same pairs, same
     # inter/union arithmetic).
-    gram = " , ".join(f"element_at(toks, i + {j})" for j in range(n))
-    arr_expr = f"""
-    CASE WHEN size(toks) >= {n} THEN
-      array_distinct(transform(sequence(1, size(toks) - {n - 1}),
-        i -> concat_ws(' ', {gram})))
-    ELSE CAST(array() AS ARRAY<STRING>) END
-    """
-    shingled = df.select(
-        F.col(id_col).alias("id"), F.split(F.lower(text_col), " ").alias("toks")
-    ).select("id", F.expr(arr_expr).alias("shingles"))
     exploded = (
-        shingled.select(
+        shingle_arrays(df, text_col, id_col, n)
+        .select(
             "id",
             F.size("shingles").cast("long").alias("n"),
             F.explode_outer("shingles").alias("shingle"),
         )
         .filter(F.col("shingle").isNotNull())
     )
-    groups = exploded.groupBy("shingle").agg(
-        F.sort_array(F.collect_list(F.struct("id", "n"))).alias("dl")
-    )
-    if max_df is not None:
-        groups = groups.filter(F.size("dl") <= max_df)
-    # Two chained generators: posexplode picks the left element, then a
-    # slice-explode emits its suffix partners. Spark's Generate operator
-    # STREAMS generator output, so per-row memory is O(len(dl)) — the
-    # n^2 pair volume is spread over n streamed rows, never materialized
-    # as one n^2-element array inside a single row (a stopword shingle
-    # would OOM a task under the flatten(transform(...)) formulation).
     inter = (
-        groups.filter(F.size("dl") >= 2)
-        .select(F.col("dl"), F.posexplode("dl").alias("i", "a"))
+        posting_pairs(exploded, "shingle", F.struct("id", "n"))
         .select(
             F.col("a.id").alias("id_a"),
             F.col("a.n").alias("na"),
-            F.explode(F.expr("slice(dl, i + 2, size(dl))")).alias("b"),
+            F.col("b.id").alias("id_b"),
+            F.col("b.n").alias("nb"),
         )
-        .select("id_a", "na", F.col("b.id").alias("id_b"), F.col("b.n").alias("nb"))
         # r13 (guide §2.3 narrower keys): 2-long pair grouping key; na/nb
-        # are functionally dependent on the ids, recovered exactly by max().
+        # are functionally dependent on the ids, recovered exactly by
+        # max() (interleaved A/B medians 2.32 -> 2.12 s at sf0.1).
         .groupBy("id_a", "id_b")
         .agg(
             F.count(F.lit(1)).alias("inter"),
@@ -147,26 +169,41 @@ def minhash_near_dups(
     n: int = 3,
     seed: int = 42,
 ) -> DataFrame:
-    """MinHash+LSH near-duplicate pairs with estimated Jaccard.
+    """MinHash+LSH near-duplicate pairs (id_a < id_b) with estimated
+    Jaccard.
 
     k permutations split into ``bands`` bands; a pair collides when any
     band matches. Probability of detection ≈ 1-(1-j^r)^b with r = k/bands
-    — tune (k, bands) to the target threshold.
+    — tune (k, bands) to the target threshold. Candidate generation is
+    a posting-list pass over (band, bucket) keys — no cross join.
     """
     assert k % bands == 0, "k must be divisible by bands"
     rows = k // bands
-    # Expressions are built as SQL strings (one JVM round trip each)
-    # rather than hundreds of composed Column objects — identical plans,
-    # ~10× cheaper client-side construction at k=128.
-    from pg_ducklake_spark.functions.hashing import sql_minhash
-
     coeffs = minhash_coeffs(k, seed)
-    sh = shingle(df, text_col, id_col, n)
-    hashed = sh.select("id", h32("shingle").alias("h"))
-    sigs = hashed.groupBy("id").agg(
-        *[F.expr(f"min({sql_minhash('h', a, b)}) AS mh{i}")
-          for i, (a, b) in enumerate(coeffs)]
-    ).persist()
+    # Project the md5-derived hash once; the k min-aggregates then cost
+    # one multiply-add each instead of k md5 computations per shingle.
+    hashed = shingle(df, text_col, id_col, n).select("id", h32("shingle").alias("h"))
+    # Persist: the signature table is tiny (one row per doc) but feeds the
+    # band explode AND both sides of the verification join — without it
+    # the whole shingle→md5 pipeline re-runs per consumer (measured at
+    # sf0.1 on dedup_minhash_lsh: 1.40 s with it, 1.82 s without).
+    # r12: one named_struct aggregate expression = one JVM round trip
+    # for all k mins (was k RPCs per build); executed plan unchanged
+    # (struct wrap + field reads collapse).
+    sigs = scoped_persist(
+        hashed.groupBy("id")
+        .agg(
+            F.expr(
+                "named_struct("
+                + ", ".join(
+                    f"'mh{i}', min({sql_minhash('h', a, b)})"
+                    for i, (a, b) in enumerate(coeffs)
+                )
+                + ")"
+            ).alias("s")
+        )
+        .select("id", "s.*")
+    )
     band_structs = ", ".join(
         f"struct(CAST({band} AS INT) AS band_id, concat_ws('_', "
         + ", ".join(
@@ -178,33 +215,24 @@ def minhash_near_dups(
     banded = sigs.selectExpr(
         "id", f"explode(array({band_structs})) AS bk"
     ).select("id", "bk.band_id", "bk.band_key")
-    # In-bucket candidates from grouped posting lists (one band-keyed
-    # shuffle + streamed pair generators) instead of the two-sided band
-    # self-join — one exchange and the join stage fewer, same pairs.
-    cands = (
-        banded.groupBy("band_id", "band_key")
-        .agg(F.sort_array(F.collect_list("id")).alias("dl"))
-        .filter(F.size("dl") >= 2)
-        .select(F.col("dl"), F.posexplode("dl").alias("i", "id_a"))
-        .select(
-            "id_a",
-            F.explode(F.expr("slice(dl, i + 2, size(dl))")).alias("id_b"),
-        )
-        .distinct()
-    )
-    sa = sigs.selectExpr("id AS id_a", *[f"mh{i} AS a{i}" for i in range(k)])
-    sb = sigs.selectExpr("id AS id_b", *[f"mh{i} AS b{i}" for i in range(k)])
+    # r12 (guide §2.4): the signature verification joins stay joins —
+    # carrying k signature columns through every posting entry would
+    # multiply the band shuffle; the ≤|candidates| joins against the
+    # persisted sigs table are the cheaper attach.
+    cands = posting_pairs(banded, ["band_id", "band_key"], "id").distinct()
+    sa = sigs.selectExpr("id AS a", *[f"mh{i} AS a{i}" for i in range(k)])
+    sb = sigs.selectExpr("id AS b", *[f"mh{i} AS b{i}" for i in range(k)])
     est = F.expr(
         "CAST("
         + " + ".join(f"IF(a{i} = b{i}, 1, 0)" for i in range(k))
         + f" AS DOUBLE) / {k}"
     )
     return (
-        cands.join(sa, "id_a")
-        .join(sb, "id_b")
+        cands.join(sa, "a")
+        .join(sb, "b")
         .withColumn("est_jaccard", est)
         .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
+        .select(F.col("a").alias("id_a"), F.col("b").alias("id_b"), "est_jaccard")
     )
 
 

@@ -17,6 +17,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pg_ducklake_spark.operators import persist_scope
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
@@ -34,37 +36,6 @@ TABLES = (
 )
 
 
-_PERSIST_SCOPES: dict[str, tuple[str, list[DataFrame]]] = {}
-
-
-def scoped_persist(df: DataFrame, scope: str) -> DataFrame:
-    """``persist()`` with a bounded lifetime (ADVICE r7: plan-internal
-    persists accumulated executor cache across repeated plan builds).
-
-    Caches register under the owning query's name. Rebuilding the same
-    query against the SAME sf_dir keeps the registration: the rebuilt
-    plan is canonically identical, so Spark's CacheManager dedups it to
-    the one existing InMemoryRelation — zero growth, and warm reruns
-    (the bench's iteration loop) keep their cache hits. Rebuilding
-    against a DIFFERENT sf_dir — the case that really accumulates,
-    because the scan path makes the plan distinct — releases the old
-    directory's caches first (the ``query`` decorator does this), so
-    one session holds at most one live cache set per query.
-    Unpersisting a frame an old plan still references is safe — Spark
-    recomputes it lazily."""
-    _PERSIST_SCOPES.setdefault(scope, ("", []))[1].append(df.persist())
-    return df
-
-
-def release_persist_scope(scope: str) -> None:
-    _sf, frames = _PERSIST_SCOPES.pop(scope, ("", []))
-    for old in frames:
-        try:
-            old.unpersist(blocking=False)
-        except Exception:
-            pass  # session already stopped
-
-
 def query(name: str, oracle: str | None = None):
     """Register a query plan and (optionally) its DuckDB oracle SQL."""
 
@@ -73,20 +44,8 @@ def query(name: str, oracle: str | None = None):
 
         @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            prev = _PERSIST_SCOPES.get(name)
-            if prev is not None and prev[0] != sf_dir:
-                release_persist_scope(name)
-            elif prev is not None:
-                # Same-sf_dir rebuild (ADVICE r8): drop the stale
-                # driver-side handles WITHOUT unpersisting — the rebuilt
-                # plans are canonically identical, so CacheManager dedups
-                # them onto the live entries (warm reruns keep their
-                # hits) while the handle list stays one-build deep.
-                _PERSIST_SCOPES[name] = (sf_dir, [])
-            out = fn(spark, sf_dir)
-            if name in _PERSIST_SCOPES:
-                _PERSIST_SCOPES[name] = (sf_dir, _PERSIST_SCOPES[name][1])
-            return out
+            with persist_scope(name, sf_dir):
+                return fn(spark, sf_dir)
 
         QUERIES[name] = wrapped
         if oracle is not None:
@@ -255,124 +214,5 @@ from pg_ducklake_spark.plans import sketches  # noqa: E402,F401
 from pg_ducklake_spark.plans import graph  # noqa: E402,F401
 from pg_ducklake_spark.plans import pgsurface  # noqa: E402,F401
 from pg_ducklake_spark.plans import retrieval  # noqa: E402,F401
-
-# Driver-sweep ordering. The external correctness sweep verifies
-# queries in dict order and has covered the first 50 entries per round;
-# registration order alone would keep whole operator families (lake_*,
-# dedup_*, sim_*, text_*, ts_*, pipe_*, stats_*, mm_*) out of that hard
-# artifact forever. Lead with every family — lifecycle, dedup, ANN,
-# multimodal, time-series, text, pipeline, stats — plus the headline
-# TPC-H/analytics shapes; the remaining relational/TPC-H breadth (all
-# driver-verified in earlier rounds) follows in registration order.
-_SWEEP_FIRST = [
-    "tpch_q1_pricing_summary",
-    "lake_dml_roundtrip",
-    "lake_time_travel",
-    "lake_change_feed",
-    "lake_ctas_partitioned",
-    "lake_vacuum_consistency",
-    "lake_inline_buffer_union",
-    "lake_schema_evolution",
-    "lake_view_macro",
-    "lake_sql_prompt_roundtrip",
-    "lake_incremental_stats",
-    "dedup_exact_groups",
-    "dedup_exact_stats",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_simhash_pairs",
-    "sim_bruteforce_topk",
-    "sim_lsh_bucket_topk",
-    "sim_ivf_topk",
-    "sim_pq_topk",
-    # Round-6 addition: the composed IVF-PQ index (displacing
-    # mm_binary_metadata, driver-green r2-r4; mm keeps two rows).
-    "sim_ivfpq_topk",
-    "sim_embedding_near_dup",
-    "mm_feature_extraction",
-    "pipe_filter_dedup_stats",
-    "ts_gap_fill_locf",
-    # Round-5 rotation: the new families take the hard driver rows;
-    # the rows they displace (q9/q18, window rank, hybrid scan,
-    # retention, histogram) are driver-green since rounds 2-4 and stay
-    # covered by the full judge harness.
-    "dedup_components",
-    "pipe_contamination_check",
-    "text_unigram_surprisal",
-    # Round-6 fourth rotation: the PG/DuckDB surface family — shared
-    # oracle TEXT through pgsyntax.rewrite (DISTINCT ON, QUALIFY, ~/!~)
-    # — takes driver rows, displacing pipe_training_order,
-    # mm_frame_sample and graph_degree_histogram (driver-green r5;
-    # their families keep rows: pipe ×4, mm_feature_extraction,
-    # graph_triangle_census).
-    "pg_distinct_on_latest",
-    "pg_qualify_top_event",
-    "pg_regex_operators",
-    # Round-5 late rotation: the session's new families take driver
-    # rows; the displaced rows (duckdb-compat SQL, range join, corr,
-    # crossmodal check, bucketed join) are driver-green since round 4
-    # and stay under the full judge harness.
-    "stats_mad_outliers",
-    # Round-7 rotation: the round-6 surfaces — schema namespaces
-    # end-to-end and the INTERVAL-returning type-tier query — take
-    # driver rows (displacing text_heavy_hitters and
-    # text_type_token_ratio, driver-green r5; the text family stays
-    # represented by surprisal/classifier/pii rows).
-    "lake_schema_namespace",
-    "ts_user_span_interval",
-    # Round-6 rotation: PII/compliance, funnel analytics, importance
-    # sampling, and exact-substring dedup take driver rows; the rows
-    # they displace (token counts, fingerprint dups, char-ngram
-    # profile, repetition scores, as-of gap stats, time buckets,
-    # embedding-quality corr, source quota) are driver-green since
-    # rounds 2-4 and stay covered by the full judge harness.
-    "text_pii_scan",
-    "text_pii_redact_stats",
-    "text_denylist_screen",
-    "events_funnel",
-    "pipe_importance_sample",
-    "dedup_substring_windows",
-    "dedup_canonical_selection",
-    # Round-6 second rotation: SemDeDup cluster-scoped pruning, the
-    # hashed linear quality classifier, and the sketch family (HLL
-    # cardinality, count-min heavy hitters) take driver rows; the rows
-    # they displace (salted skew join, ts_asof_join, langid confusion,
-    # quality scores — driver-green r2-r4) stay covered by the full
-    # judge harness.
-    "dedup_semantic_prune",
-    "text_quality_classifier",
-    "stats_hll_distinct",
-    "text_cms_heavy_hitters",
-    # Round-6 third rotation: graph analytics over the dup-pair graph
-    # (displacing stats_value_moments and events_sessionized_gap,
-    # driver-green r2-r4).
-    "graph_triangle_census",
-    # Round-6 fifth rotation: the retrieval/LM family — BM25 top-k,
-    # add-one bigram-LM perplexity, BPE first-merge pair counts —
-    # takes driver rows, displacing pipe_stratified_sample,
-    # events_transition_matrix and sim_codebook_mix (driver-green r5;
-    # their families stay represented: pipe ×4, events_funnel, sim ×6).
-    "text_bm25_topk",
-    "text_bigram_perplexity",
-    "text_bpe_pair_counts",
-    # Round-6 sixth rotation: hybrid RRF fusion (lexical Jaccard +
-    # embedding cosine, query-by-example) takes a driver row,
-    # displacing pipe_quality_gate (driver-green r5; pipe keeps
-    # filter_dedup_stats, contamination_check, importance_sample).
-    "sim_rrf_hybrid",
-]
-
-
-def _apply_sweep_order() -> None:
-    missing = [n for n in _SWEEP_FIRST if n not in QUERIES]
-    if missing:  # fail at import time, not silently mid-sweep
-        raise RuntimeError(f"_SWEEP_FIRST names not registered: {missing}")
-    ordered = {n: QUERIES[n] for n in _SWEEP_FIRST}
-    ordered.update((n, f) for n, f in QUERIES.items() if n not in ordered)
-    QUERIES.clear()
-    QUERIES.update(ordered)
-
-
-_apply_sweep_order()
 
 __all__ = ["QUERIES", "ORACLES", "TABLES", "query", "t"]

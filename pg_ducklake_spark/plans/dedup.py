@@ -7,26 +7,24 @@ oracle built from the same md5-derived hash arithmetic
 
 Scale design (100 TB of documents):
 - exact dedup = hash-groupBy (one shuffle on the digest);
-- shingle/Jaccard and MinHash avoid the O(n²) cross join by joining on
-  shingles / LSH band buckets — candidate generation is an equi-join,
-  verification touches only candidate pairs;
-- SimHash bands the 32-bit signature into 4 bytes so near-pairs
-  (hamming ≤ 3) are found by 4 equi-joins, never a cross join.
+- shingle/Jaccard, MinHash and SimHash avoid the O(n²) cross join:
+  candidates are the in-group pairs of posting lists keyed on shingle,
+  LSH band bucket or 16-bit signature band (operators/dedup.py
+  ``posting_pairs``), and verification touches only candidate pairs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from pg_ducklake_spark.functions.hashing import (
-    MERSENNE31,
-    h32,
-    minhash_coeffs,
-    minhash_col,
-    sql_h32,
-    sql_minhash,
+from pg_ducklake_spark.functions.hashing import minhash_coeffs, sql_h32, sql_minhash
+from pg_ducklake_spark.operators import scoped_persist
+from pg_ducklake_spark.operators.dedup import (
+    jaccard_pairs,
+    minhash_near_dups,
+    posting_pairs,
 )
-from pg_ducklake_spark.plans import query, rebalance, scoped_persist, t
+from pg_ducklake_spark.plans import query, rebalance, t
 
 # ---------------------------------------------------------------- exact
 
@@ -71,7 +69,7 @@ def dedup_exact_groups(spark, sf_dir):
         .filter(F.col("n_copies") > 1)
         .select("n_copies", "keeper_doc_id")
     )
-    groups = scoped_persist(groups, "dedup_exact_groups")
+    groups = scoped_persist(groups)
     # Duplicate-group count is data-dependent, so the broadcast is
     # GUARDED by an actual row count (16 bytes/row → ≤ ~16 MB at the
     # 1M cap) instead of forced blind: below the cap the join-back is a
@@ -285,19 +283,7 @@ def dedup_exact_stats(spark, sf_dir):
     )
 
 
-# ------------------------------------------------------- shingle helpers
-
-# NB: the ELSE branch must be a *typed* empty array — a bare array() is
-# ARRAY<NULL> and the resulting coercion of the THEN branch knocks the
-# whole expression out of whole-stage codegen (~5x slower).
-_SPARK_SHINGLES = """
-CASE WHEN size(toks) >= 3 THEN
-  array_distinct(transform(
-    sequence(1, size(toks) - 2),
-    i -> concat_ws(' ', element_at(toks, i), element_at(toks, i + 1),
-                   element_at(toks, i + 2))))
-ELSE CAST(array() AS ARRAY<STRING>) END
-"""
+# ------------------------------------------------ DuckDB shingle helpers
 
 _DUCK_SHINGLES = """
 list_distinct(list_transform(
@@ -307,17 +293,7 @@ list_distinct(list_transform(
 # DuckDB range(1, n) is [1, n) and lists are 1-indexed; with n = len-1 the
 # last trigram starts at len-2, matching Spark's sequence(1, len-2).
 
-_SPARK_TOKS = "split(lower(text), ' ')"
 _DUCK_TOKS = "string_split(lower(text), ' ')"
-
-
-def _spark_shingled(docs):
-    # rebalance: tokenize+shingle is the expensive fused chain — spread
-    # the raw doc rows across cores before it, not after.
-    return rebalance(docs.select("doc_id", "text"), src=docs).select(
-        "doc_id",
-        F.expr(_SPARK_TOKS).alias("toks"),
-    ).select("doc_id", F.expr(_SPARK_SHINGLES).alias("shingles"))
 
 
 _DUCK_SHINGLED = f"""
@@ -366,71 +342,14 @@ def dedup_ngram_jaccard(spark, sf_dir):
     length distribution is the scale knob.
     """
     docs = t(spark, sf_dir, "documents")
-    shingled = _spark_shingled(docs)
-    # r12 (guide §2.3/§2.4): the per-doc set size is size(shingles),
-    # computed MAP-SIDE before the explode and carried through the
-    # posting list as (doc_id, n) structs. The previous shape persisted
-    # the shingle arrays, aggregated sizes from them in a second
-    # consumer, and joined sizes back onto the pair aggregate twice
-    # (row-count-guarded broadcasts); carrying n costs 8 bytes per
-    # posting entry and deletes the sizes branch, both join stages, the
-    # persist, and the docs.count() guard job outright. Values are
-    # unchanged — same pairs, same inter/union arithmetic.
-    # explode_outer: plain explode pushes a size()>0 filter below the
-    # Generate that re-evaluates the whole shingle expression per row,
-    # interpreted — explode_outer skips that filter; nulls drop after.
-    exploded = shingled.select(
-        "doc_id",
-        F.size("shingles").cast("long").alias("n"),
-        F.explode_outer("shingles").alias("shingle"),
-    ).filter(F.col("shingle").isNotNull())
-    # Grouped posting-list pair enumeration: ONE shuffle keyed on
-    # shingle, then in-group pairs via a nested-sequence explode.
-    # Versus the self-equi-join this drops two exchanges (the mirror
-    # join side and the separate document-frequency pre-count);
-    # singleton shingles emit no pairs, so the lossless unique-tail
-    # pruning is free. The 100 TB guard is a df cap on stopword
-    # shingles (lossy, standard) — omitted here to keep exact oracle
-    # semantics.
-    # Streamed pair enumeration (posexplode + suffix slice): the n^2
-    # pair volume of a hot shingle spreads over n generator rows, never
-    # one n^2-element array in a single row (same fix as
-    # operators/dedup.py — a stopword shingle would OOM a task under
-    # flatten(transform(...))).
-    inter = (
-        exploded.groupBy("shingle")
-        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "n"))).alias("dl"))
-        .filter(F.size("dl") >= 2)
-        .select(F.col("dl"), F.posexplode("dl").alias("i", "a"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("a.n").alias("na"),
-            F.explode(F.expr("slice(dl, i + 2, size(dl))")).alias("b"),
-        )
-        .select(
-            "doc_a", "na", F.col("b.doc_id").alias("doc_b"), F.col("b.n").alias("nb")
-        )
-        # r13 (guide §2.3 narrower keys): group on the 2-long pair key
-        # only; na/nb are functionally dependent on doc_a/doc_b, so
-        # max() recovers them exactly while the ~1.27M generated pair
-        # rows hash/compare half the key bytes (interleaved A/B medians
-        # 2.32 -> 2.12 s on the full query).
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count(F.lit(1)).alias("inter"),
-            F.max("na").alias("na"),
-            F.max("nb").alias("nb"),
-        )
+    # rebalance: tokenize+shingle is the expensive fused chain — spread
+    # the raw doc rows across cores before it, not after.
+    pairs = jaccard_pairs(
+        rebalance(docs.select("doc_id", "text"), src=docs), "text", "doc_id", 0.6
     )
-    jac = F.col("inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("inter")
-    ).cast("double")
-    return (
-        inter.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= 0.6)
-        .select("doc_a", "doc_b", "jaccard")
-        .orderBy("doc_a", "doc_b")
-    )
+    return pairs.select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "jaccard"
+    ).orderBy("doc_a", "doc_b")
 
 
 # ---------------------------------------------------------- MinHash+LSH
@@ -503,81 +422,17 @@ def dedup_minhash_lsh(spark, sf_dir):
     stage and no cross join anywhere.
     """
     docs = t(spark, sf_dir, "documents")
-    exploded = _spark_shingled(docs).select(
-        "doc_id", F.explode_outer("shingles").alias("shingle")
-    ).filter(F.col("shingle").isNotNull())
-    # Project the md5-derived hash once; the 16 min-aggregates then cost
-    # one multiply-add each instead of 16 md5 computations per shingle.
-    hashed = exploded.select("doc_id", h32("shingle").alias("h"))
-    # Persist: the signature table is tiny (one row per doc) but feeds the
-    # band explode AND both sides of the verification join — without it the
-    # whole shingle→md5 pipeline re-runs per consumer.
-    # Expression trees built as SQL strings — identical plan, one JVM
-    # round trip per expression instead of ~8 per composed Column
-    # (client plan-construction cost, not execution cost).
-    from pg_ducklake_spark.functions.hashing import sql_minhash
-
-    sigs = scoped_persist(
-        # r12: one named_struct aggregate expression = one JVM round
-        # trip for all k mins (was k RPCs per build); executed plan
-        # unchanged (struct wrap + field reads collapse).
-        hashed.groupBy("doc_id")
-        .agg(
-            F.expr(
-                "named_struct("
-                + ", ".join(
-                    f"'mh{i}', min({sql_minhash('h', a, b)})"
-                    for i, (a, b) in enumerate(_COEFFS)
-                )
-                + ")"
-            ).alias("s")
-        )
-        .select("doc_id", "s.*"),
-        "dedup_minhash_lsh",
+    pairs = minhash_near_dups(
+        rebalance(docs.select("doc_id", "text"), src=docs),
+        "text",
+        "doc_id",
+        k=_K,
+        bands=_BANDS,
+        threshold=0.5,
     )
-    band_structs = ", ".join(
-        f"struct(CAST({band} AS INT) AS band_id, concat_ws('_', "
-        + ", ".join(f"cast(mh{band * _ROWS + r} as string)" for r in range(_ROWS))
-        + ") AS band_key)"
-        for band in range(_BANDS)
-    )
-    bands = sigs.selectExpr(
-        "doc_id", f"explode(array({band_structs})) AS bk"
-    ).select("doc_id", "bk.band_id", "bk.band_key")
-    # r12 (guide §2.4): in-bucket candidate pairs from grouped posting
-    # lists — one shuffle keyed on (band_id, band_key) with streamed
-    # pair generators (the jaccard layout) instead of the two-sided
-    # band self-join; one exchange and the join stage gone. The
-    # signature verification joins below are untouched (carrying k=16
-    # signature columns through every posting entry would multiply the
-    # band shuffle 4x; the ≤|candidates| joins against the persisted
-    # sigs table are the cheaper attach).
-    candidates = (
-        bands.groupBy("band_id", "band_key")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("dl"))
-        .filter(F.size("dl") >= 2)
-        .select(F.col("dl"), F.posexplode("dl").alias("i", "doc_a"))
-        .select(
-            "doc_a",
-            F.explode(F.expr("slice(dl, i + 2, size(dl))")).alias("doc_b"),
-        )
-        .distinct()
-    )
-    sa = sigs.selectExpr("doc_id AS doc_a", *[f"mh{i} AS a{i}" for i in range(_K)])
-    sb = sigs.selectExpr("doc_id AS doc_b", *[f"mh{i} AS b{i}" for i in range(_K)])
-    est = F.expr(
-        "CAST("
-        + " + ".join(f"IF(a{i} = b{i}, 1, 0)" for i in range(_K))
-        + f" AS DOUBLE) / {_K}"
-    )
-    return (
-        candidates.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= 0.5)
-        .select("doc_a", "doc_b", "est_jaccard")
-        .orderBy("doc_a", "doc_b")
-    )
+    return pairs.select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "est_jaccard"
+    ).orderBy("doc_a", "doc_b")
 
 
 # -------------------------------------------------------------- SimHash
@@ -724,12 +579,11 @@ def dedup_simhash_pairs(spark, sf_dir):
             " ELSE shiftright(simhash_hi, 16) & 65535 END"
         ),
     )
-    banded = scoped_persist(banded, "dedup_simhash_pairs")
+    banded = scoped_persist(banded)
     # r12 (guide §2.4): candidates come from grouped bucket posting
-    # lists — ONE shuffle keyed on (band_id, band_val), in-bucket pairs
-    # enumerated by the streamed posexplode + suffix-slice generators
-    # (the jaccard layout) with the full 64-bit signature carried in the
-    # 24-byte list entry. The previous self-equi-join shuffled the
+    # lists (operators/dedup.posting_pairs) — ONE shuffle keyed on
+    # (band_id, band_val), with the full 64-bit signature carried in
+    # the 24-byte list entry. The previous self-equi-join shuffled the
     # banded table twice and joined; the signature travels once now and
     # the hamming check runs straight off the pair row. Buckets are the
     # scale knob exactly as before (n/65536 expected occupancy per
@@ -739,15 +593,11 @@ def dedup_simhash_pairs(spark, sf_dir):
         + F.bit_count(F.col("a.simhash_hi").bitwiseXOR(F.col("b.simhash_hi")))
     ).cast("long")
     return (
-        banded.groupBy("band_id", "band_val")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("doc_id", "simhash_lo", "simhash_hi"))
-            ).alias("dl")
+        posting_pairs(
+            banded,
+            ["band_id", "band_val"],
+            F.struct("doc_id", "simhash_lo", "simhash_hi"),
         )
-        .filter(F.size("dl") >= 2)
-        .select(F.col("dl"), F.posexplode("dl").alias("i", "a"))
-        .select("a", F.explode(F.expr("slice(dl, i + 2, size(dl))")).alias("b"))
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -818,7 +668,6 @@ def dedup_components(spark, sf_dir):
     pointer jumping (operators/components.py) — result is the minimum
     reachable doc_id, a pure graph property both engines compute."""
     from pg_ducklake_spark.operators.components import connected_components
-    from pg_ducklake_spark.operators.dedup import jaccard_pairs
 
     docs = t(spark, sf_dir, "documents")
     pairs = jaccard_pairs(

@@ -18,7 +18,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from pg_ducklake_spark.functions.hashing import sql_h32
-from pg_ducklake_spark.plans import query, scoped_persist, t
+from pg_ducklake_spark.operators import scoped_persist
+from pg_ducklake_spark.plans import query, t
 
 _K = 8  # window length in tokens
 
@@ -109,7 +110,6 @@ def dedup_substring_windows(spark, sf_dir):
         docs.select("doc_id", "text").mapInPandas(
             _windows_kernel, "doc_id long, wh long"
         ),
-        "dedup_substring_windows",
     )
     shared = (
         exploded.groupBy("wh")

@@ -14,7 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from pg_ducklake_spark.plans import query, rebalance, scoped_persist, t
+from pg_ducklake_spark.operators import scoped_persist
+from pg_ducklake_spark.plans import query, rebalance, t
 from pg_ducklake_spark.plans.dedup import _DUCK_SHINGLED
 
 # Shared oracle CTE prefix: documents -> shingles -> Jaccard-0.5 pairs
@@ -97,7 +98,7 @@ def graph_triangle_census(spark, sf_dir):
     pass. At 100 TB the edge set — not the corpus — bounds the cost,
     and the standard high-degree-cap applies before the join the same
     way it does for the pair generation itself."""
-    edges = scoped_persist(_spark_edges(spark, sf_dir), "graph_triangle_census")
+    edges = scoped_persist(_spark_edges(spark, sf_dir))
     e1 = edges
     e2 = edges.select(
         F.col("doc_a").alias("doc_b"), F.col("doc_b").alias("doc_c")

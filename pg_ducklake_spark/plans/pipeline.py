@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from pg_ducklake_spark.functions import davg, sql_davg
 from pg_ducklake_spark.functions.hashing import sql_h32
+from pg_ducklake_spark.operators.dedup import posting_pairs, shingle_arrays
 from pg_ducklake_spark.plans import query, rebalance, t
 from pg_ducklake_spark.plans.text import _DUCK_QUALITY, _SPARK_QUALITY
 
@@ -144,19 +145,10 @@ def pipe_crossmodal_dup_check(spark, sf_dir):
     # and one exchange keyed on the digest, instead of a self-join that
     # ran the fingerprint map work once per side and shuffled both.
     # Same ordered pairs (doc_a < doc_b within each digest group).
-    pairs = (
-        docs.groupBy("h")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("dl"))
-        .filter(F.size("dl") >= 2)
-        .select(F.col("dl"), F.posexplode("dl").alias("i", "doc_a"))
-        .select(
-            "doc_a",
-            F.explode(F.expr("slice(dl, i + 2, size(dl))")).alias("doc_b"),
-        )
-    )
+    pairs = posting_pairs(docs, "h", "doc_id")
     emb = t(spark, sf_dir, "embeddings")
-    ea = emb.select(F.col("vec_id").alias("doc_a"), F.col("embedding").alias("emb_a"))
-    eb = emb.select(F.col("vec_id").alias("doc_b"), F.col("embedding").alias("emb_b"))
+    ea = emb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("emb_a"))
+    eb = emb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("emb_b"))
     from pg_ducklake_spark.plans.similarity import _use_fold
 
     fold = _use_fold(sf_dir)
@@ -169,10 +161,14 @@ def pipe_crossmodal_dup_check(spark, sf_dir):
     # broadcast exchanges also break the fingerprint-pair stage away
     # from the 64-term hydrate cosine (the fused-codegen
     # interpreted-fallback trap the old repartition() fenced).
-    pa = ea.join(F.broadcast(pairs), "doc_a")  # bcast-ok: pairs bounded by 128-bit fingerprint collisions, <<corpus
+    pa = ea.join(F.broadcast(pairs), "a")  # bcast-ok: pairs bounded by 128-bit fingerprint collisions, <<corpus
     return (
-        eb.join(F.broadcast(pa), "doc_b")  # bcast-ok: pair-bounded hydrate, <<corpus
-        .select("doc_a", "doc_b", (dot / (na * nb)).alias("emb_cosine"))
+        eb.join(F.broadcast(pa), "b")  # bcast-ok: pair-bounded hydrate, <<corpus
+        .select(
+            F.col("a").alias("doc_a"),
+            F.col("b").alias("doc_b"),
+            (dot / (na * nb)).alias("emb_cosine"),
+        )
         .orderBy("doc_a", "doc_b")
     )
 
@@ -503,13 +499,9 @@ def pipe_contamination_check(spark, sf_dir):
     Integer-only outputs, so cross-engine parity is exact by
     construction.
     """
-    from pg_ducklake_spark.plans.dedup import _SPARK_SHINGLES, _SPARK_TOKS
-
     base = t(spark, sf_dir, "documents")
     docs = rebalance(base.select("doc_id", "source", "text"), src=base)
-    shingled = docs.select(
-        "doc_id", "source", F.expr(_SPARK_TOKS).alias("toks")
-    ).select("doc_id", "source", F.expr(_SPARK_SHINGLES).alias("shingles"))
+    shingled = shingle_arrays(docs, "text", "doc_id", keep=("source",))
     # explode_OUTER + notnull, not plain explode: an inner Generate
     # derives a pushable `size(shingles) > 0` pre-filter, and Catalyst
     # pushes one copy per consuming branch below the rebalance exchange
@@ -519,13 +511,13 @@ def pipe_contamination_check(spark, sf_dir):
     # references the generated column, so it cannot sink below the
     # Generate. Same rows by construction.
     exploded = shingled.select(
-        "doc_id", "source", F.explode_outer("shingles").alias("shingle")
+        "id", "source", F.explode_outer("shingles").alias("shingle")
     ).filter(F.col("shingle").isNotNull())
     eval_sh = exploded.filter(F.col("source") == "src0").select(
-        F.col("doc_id").alias("eval_doc"), "shingle"
+        F.col("id").alias("eval_doc"), "shingle"
     )
     train_sh = exploded.filter(F.col("source") != "src0").select(
-        F.col("doc_id").alias("train_doc"), "shingle"
+        F.col("id").alias("train_doc"), "shingle"
     )
     common = (
         train_sh.groupBy("shingle")

@@ -22,7 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from pg_ducklake_spark.plans import query, scoped_persist, t
+from pg_ducklake_spark.operators import scoped_persist
+from pg_ducklake_spark.plans import query, t
 
 # No rebalance() in this module: the tokenize chains here are light
 # (split/explode feeding broadcast-pruned joins or Zipf-collapsed
@@ -167,7 +168,6 @@ def text_bm25_topk(spark, sf_dir):
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(F.size("toks").cast("long")).alias("total_len"),
         ),
-        "text_bm25_topk",
     )
     # bounded literal predicate: the query-term set, compiled into the
     # array filter so pruning precedes the explode
@@ -182,7 +182,6 @@ def text_bm25_topk(spark, sf_dir):
     tf = scoped_persist(  # reused by the df aggregate and the scoring join
         toks.groupBy("doc_id", "dl", "term")
         .agg(F.count(F.lit(1)).alias("tf")),
-        "text_bm25_topk",
     )
     # tf has one row per (doc, term) → COUNT per term = df. Partial
     # aggregation combines map-side, so a hot term never concentrates
@@ -344,7 +343,6 @@ def text_bigram_perplexity(spark, sf_dir):
         bigrams.groupBy("doc_id", "source", "w1", "w2").agg(
             F.count(F.lit(1)).alias("k")
         ),
-        "text_bigram_perplexity",
     )
     # LM counts as partial-aggregated groupBys over the CACHED collapsed
     # table (the persist is what keeps the corpus Generate planning
@@ -370,7 +368,7 @@ def text_bigram_perplexity(spark, sf_dir):
     if spark.conf.get("spark.sql.adaptive.enabled", "true") == "true":
         lm_join = lm
     else:
-        lm = scoped_persist(lm, "text_bigram_perplexity")
+        lm = scoped_persist(lm)
         lm_small = lm.count() <= 1_000_000
         lm_join = F.broadcast(lm) if lm_small else lm  # bcast-ok: row-count-guarded (<=1M bigram types)
     scored = (
@@ -624,7 +622,7 @@ def sim_rrf_hybrid(spark, sf_dir):
     in the worst case — the exactness reference. A production fusion at
     100 TB bounds each list with the pruned generators this library
     already ships (LSH/IVF for the vector list, posting-list Jaccard
-    with max_df for the lexical list) and fuses the SAME way — the RRF
+    for the lexical list) and fuses the SAME way — the RRF
     arithmetic and tie-breaking here are the contract.
     """
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")

@@ -34,7 +34,8 @@ from pg_ducklake_spark.functions.hashing import (
     sql_h32,
     sql_minhash,
 )
-from pg_ducklake_spark.plans import query, rebalance, scoped_persist, t
+from pg_ducklake_spark.operators import scoped_persist
+from pg_ducklake_spark.plans import query, rebalance, t
 
 # ---------------------------------------------------------------------------
 # HyperLogLog distinct-cardinality sketch
@@ -277,7 +278,6 @@ def text_cms_heavy_hitters(spark, sf_dir):
     ).filter(F.col("token") != "")
     counts = scoped_persist(
         toks.groupBy("token").agg(F.count(F.lit(1)).alias("n")),
-        "text_cms_heavy_hitters",
     )
     hashed = counts.withColumn("h128", F.md5("token"))
     cells = (

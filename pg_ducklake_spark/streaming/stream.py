@@ -285,19 +285,13 @@ def streaming_minhash_dedup(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from pg_ducklake_spark.functions.hashing import MERSENNE31, minhash_coeffs
+    from pg_ducklake_spark.operators.dedup import shingle_sql
 
     if k % bands:
         raise ValueError(f"k={k} not divisible by bands={bands}")
     r = k // bands
     coeffs = minhash_coeffs(k)
 
-    gram = " , ".join(f"element_at(toks, i + {j})" for j in range(shingle_n))
-    shingles = f"""
-    CASE WHEN size(toks) >= {shingle_n} THEN
-      array_distinct(transform(sequence(1, size(toks) - {shingle_n - 1}),
-        i -> concat_ws(' ', {gram})))
-    ELSE CAST(array() AS ARRAY<STRING>) END
-    """
     hashes = (
         "transform(_shingles, s ->"
         " CAST(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT))"
@@ -314,7 +308,7 @@ def streaming_minhash_dedup(
     )
     prepared = (
         docs.withColumn("toks", F.split(F.lower(content_col), " "))
-        .withColumn("_shingles", F.expr(shingles))
+        .withColumn("_shingles", F.expr(shingle_sql(shingle_n)))
         .filter(F.size("_shingles") > 0)
         .withColumn("_hashes", F.expr(hashes))
         .withColumn("_sig", F.expr(sig))

@@ -39,6 +39,34 @@ def test_jaccard_pairs_detects_planted_dup(spark):
     assert sorted(r.doc_id for r in deduped.collect()) == [1, 3]
 
 
+def test_posting_pairs_equals_self_join(spark):
+    """The pair kernel emits exactly the ordered self-join pairs: keys
+    with 1, 2 and 5 members, a composite key, and a struct member
+    ordered by its first field."""
+    from pg_ducklake_spark.operators.dedup import posting_pairs
+
+    rows = [("solo", 0, 7)]
+    rows += [("two", 0, m) for m in (9, 3)]
+    rows += [("five", 0, m) for m in (5, 1, 4, 2, 8)]
+    rows += [("five", 1, m) for m in (7, 6)]  # same k1, other k2
+    df = spark.createDataFrame(rows, "k1 string, k2 int, m long")
+    joined = (
+        df.alias("x")
+        .join(df.alias("y"), ["k1", "k2"])
+        .filter(F.col("x.m") < F.col("y.m"))
+        .select(F.col("x.m"), F.col("y.m"))
+        .collect()
+    )
+    want = sorted(tuple(r) for r in joined)
+    got = posting_pairs(df, ["k1", "k2"], "m").collect()
+    assert sorted((r.a, r.b) for r in got) == want
+    assert len(want) == 1 + 10 + 1
+    by_k1 = posting_pairs(df, "k1", "m").collect()
+    assert len(by_k1) == 1 + 21  # k1 = "five" alone holds 7 members
+    structs = posting_pairs(df, ["k1", "k2"], F.struct("m", "k2")).collect()
+    assert sorted((r.a.m, r.b.m) for r in structs) == want
+
+
 def test_minhash_near_dups_parameterized(docs):
     from pg_ducklake_spark.operators.dedup import minhash_near_dups
 

@@ -371,25 +371,24 @@ def test_bigram_perplexity_no_zipf_window(plans):
     assert "windowspecdefinition" not in s, "LM counts regressed to windows"
 
 
-def test_scoped_persist_releases_on_sf_dir_change(spark, sf_dir):
+@pytest.mark.parametrize("name", ["text_bm25_topk", "dedup_minhash_lsh"])
+def test_scoped_persist_releases_on_sf_dir_change(spark, sf_dir, name):
     """ADVICE r7: plan-internal persists must not accumulate executor
     cache across plan builds. Same-dir rebuilds dedup to the existing
     InMemoryRelation (no growth, warm reruns keep their hits); a build
     against a different sf_dir releases the previous directory's
     caches. Counts are DELTAS against a pre-test baseline — the shared
-    test session carries unrelated caches."""
-    from pg_ducklake_spark.plans import (
-        _PERSIST_SCOPES,
-        QUERIES,
-        release_persist_scope,
-    )
+    test session carries unrelated caches. dedup_minhash_lsh persists
+    inside the operator it calls (operators/dedup.minhash_near_dups),
+    so it checks that an operator's persist joins the query's scope."""
+    from pg_ducklake_spark.operators import _PERSIST_SCOPES, release_persist_scope
+    from pg_ducklake_spark.plans import QUERIES
 
     def ids():
         return {
             r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()
         }
 
-    name = "text_bm25_topk"
     release_persist_scope(name)  # clean slate for this scope
     base = ids()
     QUERIES[name](spark, sf_dir).collect()

@@ -189,6 +189,30 @@ def test_rename_then_readd_same_name(lake, spark):
     assert rows == [(0, "orig", None), (1, "kept", "newg")]
 
 
+def test_frozen_readd_matches_live(lake, spark, tmp_path):
+    """A frozen lake reads a dropped-then-re-added column (and one
+    re-added after a rename) like the live lake: files older than the
+    re-add read NULL, never the old column's bytes."""
+    from pg_ducklake_spark.freeze import FrozenLake
+
+    lake.create_table("t", "a bigint, g string")
+    lake.insert("t", spark.createDataFrame([(1, "old")], "a bigint, g string"))
+    lake.drop_column("t", "g")
+    lake.add_column("t", "g", "string")
+    lake.create_table("r", "a bigint, g string")
+    lake.insert("r", spark.createDataFrame([(1, "orig")], "a bigint, g string"))
+    lake.rename_column("r", "g", "h")
+    lake.add_column("r", "g", "string")
+    out = os.path.join(str(tmp_path), "readd.ducklake")
+    lake.freeze(out)
+    fro = FrozenLake(spark, out)
+    for name in ("t", "r"):
+        live = sorted(tuple(r) for r in lake.table(name).collect())
+        assert sorted(tuple(r) for r in fro.table(name).collect()) == live
+    assert live == [(1, "orig", None)]
+    assert fro.scan("t", "g = 'old'").count() == 0
+
+
 def test_inline_update_preserves_initial_default(lake, spark):
     """Found by tools/fuzz_schema.py seed 99: updating an inline row
     that predates an ADD COLUMN DEFAULT must keep the default-filled

@@ -3,7 +3,9 @@
 Usage: python tools/explain_queries.py <tag> [suffix] [name_filter ...]
 
 Writes ``plans/<tag>/<query>_<suffix>.txt`` (suffix defaults to
-``before``) for every headline bench query — the optimization round's
+``before``) for every headline bench query whose name contains one of
+the filters (all of them without filters), plus any filter that is the
+exact name of a registered non-headline query — the optimization round's
 plan-evidence artifacts. Plans are built with the same per-query conf
 the bench applies, so the captured shape is the shape the bench times.
 """
@@ -40,6 +42,7 @@ def main() -> None:
     names = [n for n in bench.HEADLINE if n in QUERIES]
     if filters:
         names = [n for n in names if any(f in n for f in filters)]
+        names += [f for f in filters if f in QUERIES and f not in names]
     for name in names:
         bench._apply_query_conf(spark, name)
         try:

@@ -13,7 +13,9 @@ Checks: bloom (prune ∘ semi == semi, contains == IN), asof_join
 (latest right <= left per key, ties included), group_order_statistic
 (lower median per group), pack_sequences (bin arithmetic vs window
 prefix sums), substring_spans (unicode/multi-space/all-whitespace
-corpora vs the registered oracle), merge (update/delete/insert and the
+corpora vs the registered oracle), jaccard (planted pairs at, above
+and below the n-gram Jaccard threshold; the same corpus through
+MinHash+LSH), merge (update/delete/insert and the
 change feed vs set-logic SQL, over a pruned multi-file target), bm25
 (Zipf corpora, tied-score duplicates, tf>1 plants), hll (Zipf-heavy
 repeated/negative user_ids, single-user types).
@@ -298,6 +300,50 @@ def check_substring_spans(spark, con, rng, tmp) -> list[str]:
     return errs
 
 
+def check_jaccard(spark, con, rng, tmp) -> list[str]:
+    """dedup_ngram_jaccard (operators/dedup.jaccard_pairs over the
+    posting-pair kernel) at its 0.6 threshold: planted pairs whose
+    trigram Jaccard is just above (0.65), exactly at (0.6) and just
+    below (0.55) it, plus Zipf-token random docs (repeated trigrams,
+    hot shingles with long posting lists), verbatim copies, mixed case,
+    multi-space runs, docs under 3 tokens, empty and NULL text. The
+    same corpus goes through dedup_minhash_lsh. Oracles are the
+    library's registered SQL."""
+    from pg_ducklake_spark.plans import ORACLES, QUERIES
+
+    docs = []
+    # A doc of 22 distinct tokens has 20 trigrams; a copy of its first
+    # p tokens shares p - 2 of them: Jaccard (p - 2) / 20.
+    for b in range(6):
+        toks = [f"b{b}w{j}" for j in range(22)]
+        docs.append((len(docs), " ".join(toks)))
+        for p in (15, 14, 13):  # 13/20, 12/20, 11/20
+            docs.append((len(docs), " ".join(toks[:p])))
+    vocab = ["the", "a", "of", "Data", "data", "lake", "naïve", "É", "x"]
+    for _ in range(40):
+        k = int(rng.integers(0, 14))
+        idx = (rng.zipf(1.6, size=k) - 1) % len(vocab)
+        sep = "  " if rng.random() < 0.15 else " "
+        docs.append((len(docs), sep.join(vocab[int(i)] for i in idx)))
+    for _ in range(4):
+        docs.append((len(docs), docs[int(rng.integers(0, len(docs)))][1]))
+    docs += [(len(docs), ""), (len(docs) + 1, "two words"), (len(docs) + 2, None)]
+    order = rng.permutation(len(docs))  # ids no longer follow plant order
+    rows = [(int(order[i]), docs[i][1]) for i in range(len(docs))]
+    spark.createDataFrame(rows, "doc_id long, text string").coalesce(
+        1
+    ).write.mode("overwrite").parquet(f"{tmp}/jac/documents.parquet")
+    con.execute(
+        "CREATE OR REPLACE VIEW documents AS "
+        f"FROM '{tmp}/jac/documents.parquet/*.parquet'"
+    )
+    return [
+        err
+        for name in ("dedup_ngram_jaccard", "dedup_minhash_lsh")
+        for err in _compare(name, QUERIES[name](spark, f"{tmp}/jac"), con, ORACLES[name])
+    ]
+
+
 def check_merge(spark, con, rng, tmp) -> list[str]:
     """Upsert then delete-merge against set-logic SQL. The target spans
     four files by key range and the source keys only the middle two, so
@@ -466,6 +512,7 @@ CHECKS = [
     check_quantile,
     check_packing,
     check_substring_spans,
+    check_jaccard,
     check_merge,
     check_bm25,
     check_hll,

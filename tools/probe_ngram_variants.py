@@ -2,7 +2,8 @@
 variants (guide §1: measure in the shape the bench times).
 
 Variants (all oracle-exact by construction):
-  base  — committed shape: posting lists keyed on the shingle STRING.
+  base  — the committed dedup_ngram_jaccard plan: posting lists keyed
+          on the shingle STRING.
   hkey  — posting lists keyed on xxhash64(shingle); the string rides in
           the entry; pairs require exact string equality (verify per
           group before pairing — collision-proof).
@@ -25,115 +26,73 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from pg_ducklake_spark.plans import t
-from pg_ducklake_spark.plans.dedup import _spark_shingled
+from pg_ducklake_spark.operators.dedup import posting_pairs, shingle_arrays
+from pg_ducklake_spark.plans import QUERIES, rebalance, t
 from pg_ducklake_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 THRESH = 0.6
 
 
-def base(spark):
-    shingled = _spark_shingled(t(spark, SF_DIR, "documents"))
-    exploded = shingled.select(
-        "doc_id",
+def _shingled(spark):
+    """(id, shingles) of the documents, built as the committed plan does."""
+    docs = t(spark, SF_DIR, "documents")
+    return shingle_arrays(
+        rebalance(docs.select("doc_id", "text"), src=docs), "text", "doc_id"
+    )
+
+
+def _exploded(spark):
+    return _shingled(spark).select(
+        "id",
         F.size("shingles").cast("long").alias("n"),
         F.explode_outer("shingles").alias("shingle"),
     ).filter(F.col("shingle").isNotNull())
-    inter = (
-        exploded.groupBy("shingle")
-        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "n"))).alias("dl"))
-        .filter(F.size("dl") >= 2)
-        .select(F.col("dl"), F.posexplode("dl").alias("i", "a"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("a.n").alias("na"),
-            F.explode(F.expr("slice(dl, i + 2, size(dl))")).alias("b"),
-        )
-        .select("doc_a", "na", F.col("b.doc_id").alias("doc_b"), F.col("b.n").alias("nb"))
-        .groupBy("doc_a", "doc_b", "na", "nb")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    jac = F.col("inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("inter")
+
+
+def _jaccard(inter, count_col="inter"):
+    jac = F.col(count_col).cast("double") / (
+        F.col("na") + F.col("nb") - F.col(count_col)
     ).cast("double")
+    return inter.withColumn("jaccard", jac).filter(F.col("jaccard") >= THRESH)
+
+
+def _pair_counts(pairs, count_col):
     return (
-        inter.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= THRESH)
-        .select("doc_a", "doc_b", "jaccard")
-        .orderBy("doc_a", "doc_b")
+        pairs.select(
+            F.col("a.id").alias("doc_a"),
+            F.col("a.n").alias("na"),
+            F.col("b.id").alias("doc_b"),
+            F.col("b.n").alias("nb"),
+        )
+        .groupBy("doc_a", "doc_b", "na", "nb")
+        .agg(F.count(F.lit(1)).alias(count_col))
     )
+
+
+def base(spark):
+    return QUERIES["dedup_ngram_jaccard"](spark, SF_DIR)
 
 
 def hkey(spark):
-    shingled = _spark_shingled(t(spark, SF_DIR, "documents"))
-    exploded = (
-        shingled.select(
-            "doc_id",
-            F.size("shingles").cast("long").alias("n"),
-            F.explode_outer("shingles").alias("shingle"),
-        )
-        .filter(F.col("shingle").isNotNull())
-        .select(F.xxhash64("shingle").alias("h"), "shingle", "doc_id", "n")
+    exploded = _exploded(spark).select(
+        F.xxhash64("shingle").alias("h"), "shingle", "id", "n"
     )
-    inter = (
-        exploded.groupBy("h")
-        .agg(F.sort_array(F.collect_list(F.struct("shingle", "doc_id", "n"))).alias("dl"))
-        .filter(F.size("dl") >= 2)
-        .select(F.col("dl"), F.posexplode("dl").alias("i", "a"))
-        .select(
-            F.col("a.shingle").alias("sh_a"),
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("a.n").alias("na"),
-            F.explode(F.expr("slice(dl, i + 2, size(dl))")).alias("b"),
-        )
-        .filter(F.col("sh_a") == F.col("b.shingle"))
-        .select("doc_a", "na", F.col("b.doc_id").alias("doc_b"), F.col("b.n").alias("nb"))
-        .groupBy("doc_a", "doc_b", "na", "nb")
-        .agg(F.count(F.lit(1)).alias("inter"))
+    pairs = posting_pairs(exploded, "h", F.struct("shingle", "id", "n")).filter(
+        F.col("a.shingle") == F.col("b.shingle")
     )
-    jac = F.col("inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("inter")
-    ).cast("double")
     return (
-        inter.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= THRESH)
+        _jaccard(_pair_counts(pairs, "inter"))
         .select("doc_a", "doc_b", "jaccard")
         .orderBy("doc_a", "doc_b")
     )
 
 
 def twopass(spark):
-    docs = t(spark, SF_DIR, "documents")
-    shingled = _spark_shingled(docs)
-    exploded = (
-        shingled.select(
-            "doc_id",
-            F.size("shingles").cast("long").alias("n"),
-            F.explode_outer("shingles").alias("shingle"),
-        )
-        .filter(F.col("shingle").isNotNull())
-        .select(F.xxhash64("shingle").alias("h"), "doc_id", "n")
-    )
-    hinter = (
-        exploded.groupBy("h")
-        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "n"))).alias("dl"))
-        .filter(F.size("dl") >= 2)
-        .select(F.col("dl"), F.posexplode("dl").alias("i", "a"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("a.n").alias("na"),
-            F.explode(F.expr("slice(dl, i + 2, size(dl))")).alias("b"),
-        )
-        .select("doc_a", "na", F.col("b.doc_id").alias("doc_b"), F.col("b.n").alias("nb"))
-        .groupBy("doc_a", "doc_b", "na", "nb")
-        .agg(F.count(F.lit(1)).alias("hinter"))
-    )
-    hjac = F.col("hinter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("hinter")
-    ).cast("double")
+    exploded = _exploded(spark).select(F.xxhash64("shingle").alias("h"), "id", "n")
+    hinter = _pair_counts(posting_pairs(exploded, "h", F.struct("id", "n")), "hinter")
     cand = (
-        hinter.filter(hjac >= THRESH)
+        _jaccard(hinter, "hinter")
         .filter(F.col("doc_a") != F.col("doc_b"))
         .select("doc_a", "doc_b")
     )
@@ -141,14 +100,14 @@ def twopass(spark):
         F.struct("doc_a", "doc_b").alias("pid"),
         F.explode(
             F.array(
-                F.struct(F.lit("a").alias("role"), F.col("doc_a").alias("id")),
-                F.struct(F.lit("b").alias("role"), F.col("doc_b").alias("id")),
+                F.struct(F.lit("a").alias("role"), F.col("doc_a").alias("doc")),
+                F.struct(F.lit("b").alias("role"), F.col("doc_b").alias("doc")),
             )
         ).alias("side"),
-    ).select("pid", "side.role", "side.id")
+    ).select("pid", "side.role", "side.doc")
     attached = (
-        _spark_shingled(docs)
-        .join(pairs_long, F.col("doc_id") == F.col("id"))
+        _shingled(spark)
+        .join(pairs_long, F.col("id") == F.col("doc"))
         .select("pid", "role", "shingles")
     )
     agg = attached.groupBy("pid").agg(
@@ -162,12 +121,8 @@ def twopass(spark):
         F.size("sa").cast("long").alias("na"),
         F.size("sb").cast("long").alias("nb"),
     )
-    jac = F.col("inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("inter")
-    ).cast("double")
     return (
-        out.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= THRESH)
+        _jaccard(out)
         .select("doc_a", "doc_b", "jaccard")
         .orderBy("doc_a", "doc_b")
     )
