@@ -116,51 +116,18 @@ WARMUP = 4
 ITERS = 3
 
 # Per-query runtime-conf policy (chosen by measurement over the
-# tools/bench_tune.py / grid sweeps; each knob is a documented
-# engine-level trade, applied before the query's plan is BUILT so the
-# planner sees it — the same adaptivity a cost-based engine applies per
-# query, done here statically because AQE's runtime replanning costs
-# more than it saves at interactive scale):
-# - Whole-stage codegen ON by default — the 100 TB stance, and after
-#   the round-5 move to fold-based dot products (no giant generated
-#   methods left in the hot paths) also the measured winner for most
-#   of the sweep. The OFF list holds the shapes where a full A/B
-#   (2 warm + 2 timed per query per setting) measured interpreted
-#   evaluation faster at bench scale: iterative label propagation
-#   (components — codegen recompiles per round), Arrow/mapInPandas
-#   stages, and small window-dominated plans where source generation
-#   is the whole cost.
+# tools/bench_tune.py / grid sweeps; applied before the query's plan is
+# BUILT so the planner sees it — the same adaptivity a cost-based engine
+# applies per query, done here statically because AQE's runtime
+# replanning costs more than it saves at interactive scale). Whole-stage
+# codegen stays on for every query: with the codegen cache sized to the
+# working set (session.py) no class is recompiled after warmup, and
+# all-on measured no slower over the sweep than turning codegen off for
+# the window, explode and mapInPandas shapes.
 # - 8 MB file splits only for queries whose timed stage is scan-bound
 #   (big fan-out over lineitem/orders/events): the sf0.1 files are one
 #   ~20 MB parquet each, so whole-file (128 MB) splits read them on one
 #   core; everything else prefers the lower task count.
-_CODEGEN_OFF = {
-    "events_by_type",
-    "events_sessionized_gap",
-    "rel_window_rank",
-    "dedup_exact_stats",
-    "dedup_exact_groups",
-    "dedup_substring_spans",
-    "text_quality_scores",
-    "text_fingerprint_dups",
-    "text_repetition_scores",
-    "sim_bruteforce_topk",
-    "sim_lsh_bucket_topk",
-    "ts_asof_join",
-    "ts_gap_fill_locf",
-    "pipe_filter_dedup_stats",
-    "pipe_crossmodal_dup_check",
-    "pipe_source_quota_cap",
-    "events_value_quantiles",
-    "dedup_components",
-    "mm_feature_extraction",
-    # r9 re-classification after the plan changes: BM25's steady state
-    # is small joins over the cached tf — per-stage codegen compile
-    # costs more than it saves (0.72 s vs 0.90 s); same for the spans
-    # explode chain (0.48 s vs 0.64 s). BPE stays codegen-on (0.30 s
-    # vs 0.40 s).
-    "text_bm25_topk",
-}
 _SPLIT_8M = {
     # r12 re-measure (A/B, 5-draw medians, warmed session): q1's
     # single-file lineitem scan fused the whole decimal aggregate into
@@ -185,10 +152,6 @@ _SPLIT_8M = {
 
 
 def _apply_query_conf(spark, name: str) -> None:
-    spark.conf.set(
-        "spark.sql.codegen.wholeStage",
-        "false" if name in _CODEGEN_OFF else "true",
-    )
     spark.conf.set(
         "spark.sql.files.maxPartitionBytes",
         str((8 if name in _SPLIT_8M else 128) * 1024 * 1024),
@@ -227,12 +190,20 @@ def main() -> None:
         if os.path.exists(f"{sf_dir}/{tbl}.parquet"):
             _t(spark, sf_dir, tbl)
     spark.read.parquet(f"{sf_dir}/region.parquet").limit(1).collect()
+    # Generated-class compiles (Spark's CodegenMetrics, JVM-wide): a warm
+    # process should compile nothing in the timed loop.
+    compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_SOURCE_CODE_SIZE
+    )
+    c_warmup = compiles().getCount()
     for _ in range(WARMUP):
         for name in names:
             _apply_query_conf(spark, name)
             QUERIES[name](spark, sf_dir).collect()
     build_sums = dict.fromkeys(names, 0.0)
     exec_sums = dict.fromkeys(names, 0.0)
+    c_timed = compiles().getCount()
     for _ in range(ITERS):
         for name in names:
             _apply_query_conf(spark, name)
@@ -243,6 +214,7 @@ def main() -> None:
             t2 = time.time()
             build_sums[name] += t1 - t0
             exec_sums[name] += t2 - t1
+    c_end = compiles().getCount()
     times = {
         n: round((build_sums[n] + exec_sums[n]) / ITERS, 4) for n in names
     }
@@ -314,6 +286,11 @@ def main() -> None:
                     round(total / oracle_total, 4) if oracle_total else None
                 ),
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+                "codegen_compiles_warmup": c_timed - c_warmup,
+                "codegen_compiles_timed": c_end - c_timed,
+                "codegen_cache_max_entries": int(
+                    spark.conf.get("spark.sql.codegen.cache.maxEntries")
+                ),
                 "warmup_iters": WARMUP,
                 "timed_iters": ITERS,
                 "timed": "build+execute per iteration (same loop as "

@@ -160,11 +160,25 @@ def get_spark(app_name: str = "pg_ducklake_spark", cpus: int | None = None) -> S
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Local-mode split sizing: the sf0.1 tables are single ~20 MB
-        # parquet files, which the 128 MB default reads as ONE partition —
-        # zero scan parallelism. 4 MB splits spread the scan across cores.
-        # (On a real cluster with properly sized files, keep the default.)
+        # Local-mode split sizing. Parquet splits are assigned whole row
+        # groups (by row-group midpoint), and the sf fixtures hold ONE row
+        # group per file, so 4 MB splits do not spread their scans: sf0.1
+        # lineitem (~10 MB) plans 3 partitions and one of them reads all
+        # 600,000 rows while the other two read nothing. The split only
+        # parallelises files written with many row groups. (On a real
+        # cluster with properly sized files, keep the default.)
         .config("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
+        # Generated-class cache (a Guava LRU keyed by the generated
+        # source; default 100 entries). The plan library's working set is
+        # ~2.1k distinct classes at sf0.001 (olap_sweep alone: ~220), so
+        # at 100 every class was evicted before its next use and each
+        # warm pass recompiled it: 2.7k compiles per library pass, ~200
+        # per olap_sweep pass. Guava splits the bound over its 4 segments,
+        # so 4096 leaves ~2x headroom per segment (2048 still evicted half
+        # the classes); warm library passes then compile 1-2% of the first,
+        # all from queries whose generated source changes per build, and
+        # olap_sweep compiles none. Static conf: it must be set here.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")

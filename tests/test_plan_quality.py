@@ -458,3 +458,32 @@ def test_substring_spans_shape(plans):
     assert "TakeOrderedAndProject" in s, s
     assert "Window" not in s, s
     assert "Join" not in s, s
+
+
+def test_warm_sweep_compiles_nothing(spark, sf_dir):
+    """A warm rebuild of the same queries must reuse every generated
+    class. Spark's codegen cache defaulted to 100 entries, fewer than
+    the ~220 classes these 16 queries (perfbench's olap_sweep) generate,
+    so each warm pass evicted and recompiled all of them; get_spark sizes
+    the cache to the library's working set."""
+    from pg_ducklake_spark.plans import QUERIES
+
+    names = [
+        "tpch_q1_pricing_summary", "tpch_q3_shipping_priority",
+        "tpch_q5_local_supplier_volume", "tpch_q6_forecast_revenue",
+        "tpch_q8_market_share", "tpch_q10_returned_items",
+        "tpch_q13_customer_distribution", "tpch_q18_large_volume_customer",
+        "events_by_type", "events_daily", "events_sessionized_gap",
+        "events_retention", "rel_window_rank", "ts_asof_join",
+        "ts_time_bucket_rollup", "stats_price_quantity_corr",
+    ]
+    compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_SOURCE_CODE_SIZE
+    )
+    for name in names:
+        QUERIES[name](spark, sf_dir).collect()
+    before = compiles().getCount()
+    for name in names:
+        QUERIES[name](spark, sf_dir).collect()
+    assert compiles().getCount() - before == 0
