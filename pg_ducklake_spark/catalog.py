@@ -242,17 +242,18 @@ class TableState:
     # in commit order — lets the scan map a current column back to the
     # physical name it carries inside files written before the rename.
     renames: list[list] = field(default_factory=list)
+    # column -> the snapshot of its ADD (≙ ducklake_column.begin_snapshot):
+    # given by a frozen catalog, which carries no schema log; otherwise
+    # memoized from schema_log by added_at (cleared on a schema change).
+    column_adds: dict[str, int] = field(default_factory=dict)
 
     @property
     def total_rows(self) -> int:
         deleted = sum(d["deleted"] for d in self.dvs.values())
         return sum(f.rows for f in self.files.values()) - deleted + len(self.inline_rows)
 
-    def physical_name(self, col: str, begin_snapshot: int) -> str:
-        """The column name physically stored in files written at
-        ``begin_snapshot`` for current-schema column ``col``: walk the
-        rename log backwards, undoing every rename that happened after
-        the file was written."""
+    def _physical_name(self, col: str, begin_snapshot: int) -> str:
+        """Undo every rename committed after ``begin_snapshot``."""
         for sid, old, new in reversed(self.renames):
             if sid > begin_snapshot and col == new:
                 col = old
@@ -264,16 +265,52 @@ class TableState:
         renames (its physical name at each log vintage); the oldest
         contiguous entry containing it is its add. A DROP-then-re-ADDed
         name is dated by its own add, not by the column that carried it
-        before, so files older than that read it as NULL or its
-        initial_default, never as the dropped column's bytes."""
-        added = 0
-        for sid, sj in reversed(self.schema_log):
-            pname = self.physical_name(col, sid)
-            if any(fd["name"] == pname for fd in sj["fields"]):
-                added = sid
-            else:
-                break
-        return added
+        before."""
+        if col not in self.column_adds:
+            added = 0
+            for sid, sj in reversed(self.schema_log):
+                pname = self._physical_name(col, sid)
+                if any(fd["name"] == pname for fd in sj["fields"]):
+                    added = sid
+                else:
+                    break
+            self.column_adds[col] = added
+        return self.column_adds[col]
+
+    def vintage(
+        self, schema: T.StructType, bs: int
+    ) -> tuple[tuple[str | None, ...], tuple[tuple[str, str], ...]]:
+        """The vintage rule: what data written at snapshot ``bs`` (a data
+        file's or an inline row's begin snapshot, or a change file's
+        commit) holds for each column of ``schema``. Returns each
+        column's physical name there, or None where the data cannot hold
+        the column, and the ``(column, initial_default)`` fills for the
+        None columns that have one. Every reader (live, frozen, change
+        feed, CDC stream, file pruning) maps columns through here.
+
+        - RENAME COLUMN is metadata-only (≙ ducklake_name_mapping):
+          data written before a rename keeps the old name.
+        - A column whose logical ADD postdates ``bs`` maps to None even
+          when the data holds a DROPped column of the same name: name
+          reuse must not leak stale bytes.
+        - A physical name claimed by another column's rename walk
+          belongs to that older column; a same-named column must have
+          been re-added after the rename, so it maps to None."""
+        names = [f.name for f in schema.fields]
+        phys = [
+            self._physical_name(c, bs) if self.added_at(c) <= bs else None
+            for c in names
+        ]
+        claimed = {p for c, p in zip(names, phys) if p is not None and p != c}
+        phys = tuple(
+            None if p == c and p in claimed else p for c, p in zip(names, phys)
+        )
+        fills = tuple(
+            (f.name, f.metadata["initial_default"])
+            for f, p in zip(schema.fields, phys)
+            if p is None and (f.metadata or {}).get("initial_default") is not None
+        )
+        return phys, fills
 
     def schema_at(self, snapshot_id: int) -> T.StructType:
         cur = None
@@ -302,6 +339,7 @@ def _fork(state: TableState) -> TableState:
         history=list(state.history),
         schema_log=list(state.schema_log),
         renames=list(state.renames),
+        column_adds=dict(state.column_adds),
     )
 
 
@@ -489,6 +527,7 @@ class SnapshotLog:
             state.schema = T.StructType.fromJson(snap["schema"])
             state.schema_version = snap.get("schema_version", state.schema_version + 1)
             state.schema_log.append((sid, snap["schema"]))
+            state.column_adds.clear()
             rn = snap.get("rename")
             if rn is None:
                 # Logs written before the structured field: recover the

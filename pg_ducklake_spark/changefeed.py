@@ -16,6 +16,7 @@ files the range touched, never the table.
 
 from __future__ import annotations
 
+import dataclasses
 import datetime as dt
 import os
 from typing import TYPE_CHECKING
@@ -24,9 +25,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pg_ducklake_spark.catalog import from_json_value
 from pg_ducklake_spark.errors import SnapshotNotFoundError
-from pg_ducklake_spark.lake import _local_df
+from pg_ducklake_spark.lake import (
+    _fill,
+    _local_df,
+    _union,
+    inline_values,
+    read_files,
+    read_vintage,
+)
 
 if TYPE_CHECKING:
     from pg_ducklake_spark.lake import Lake
@@ -71,54 +78,15 @@ def table_changes(lake: "Lake", name: str, start, end=None) -> DataFrame:
             T.StructField("_commit_timestamp", T.TimestampType(), True),
         ]
     )
+    ct = T.StructField("_change_type", T.StringType())
     parts: list[DataFrame] = []
-
-    current_names = tuple(f.name for f in schema.fields)
-
     for v in range(a, b + 1):
         snap = log.read_snapshot(v)
         op = snap.get("operation", "WRITE")
         if op in _SKIP_OPS:
             continue
-        # Data committed at snapshot v carries the column names of THAT
-        # vintage; map each end-schema column back through any later
-        # renames (same walk as Lake._read_files).
-        phys = tuple(
-            end_state.physical_name(c, v) for c in current_names
-        )
-
-        def read_mapped(paths: list[str], with_ct: bool) -> DataFrame:
-            extra = (
-                [T.StructField("_change_type", T.StringType())]
-                if with_ct
-                else []
-            )
-            if phys == current_names:
-                rs = T.StructType(list(schema.fields) + extra)
-                return lake.spark.read.schema(rs).parquet(*paths)
-            claimed = {p for c, p in zip(current_names, phys) if p != c}
-            read_fields, aliases = [], []
-            for f, p in zip(schema.fields, phys):
-                if p == f.name and p in claimed:
-                    aliases.append((None, f))
-                    continue
-                read_fields.append(T.StructField(p, f.dataType, True))
-                aliases.append((p, f))
-            df = lake.spark.read.schema(
-                T.StructType(read_fields + extra)
-            ).parquet(*paths)
-            proj = [
-                (
-                    F.col(p).alias(f.name)
-                    if p is not None
-                    else F.lit(None).cast(f.dataType).alias(f.name)
-                )
-                for p, f in aliases
-            ]
-            if with_ct:
-                proj.append(F.col("_change_type"))
-            return df.select(*proj)
-
+        # Data committed at snapshot v is of vintage v.
+        vintage = end_state.vintage(schema, v)
         ts = snap.get("timestamp")
         ts_lit = (
             F.lit(dt.datetime.fromisoformat(ts)).cast("timestamp") if ts else F.lit(None).cast("timestamp")
@@ -138,7 +106,9 @@ def table_changes(lake: "Lake", name: str, start, end=None) -> DataFrame:
         # rewrites/inserts already represented there.
         if added and op not in ("DELETE", "UPDATE", "MERGE"):
             paths = [os.path.join(table_dir, p) for p in added]
-            parts.append(stamp(read_mapped(paths, with_ct=False), "insert"))
+            parts.append(
+                stamp(read_vintage(lake.spark, paths, schema, vintage), "insert")
+            )
         if op == "DELETE" and snap.get("dv") and not snap.get("cdf_path"):
             # r11: DV-mode DELETE writes positions only (the delete
             # files ARE the change record — the reference's
@@ -146,63 +116,44 @@ def table_changes(lake: "Lake", name: str, start, end=None) -> DataFrame:
             # also materialized every deleted row to a CDF file,
             # contradicting its "a small delete touches zero data
             # bytes" contract). Reconstruct the deleted rows at feed
-            # time: delta positions = this snapshot's cumulative DV
-            # minus the prior DV state, semi-joined into a pre-delete
-            # vintage read of just the touched files.
+            # time from the delta positions.
             parts.append(
                 stamp(
                     _derive_dv_deletions(
-                        lake, name, log, snap, v, end_state, schema,
-                        table_dir,
+                        lake, log, snap, v, end_state, schema, table_dir
                     ),
                     "delete",
                 )
             )
         if snap.get("cdf_path"):
-            cdf = read_mapped(
-                [os.path.join(table_dir, snap["cdf_path"])], with_ct=True
+            cdf_path = os.path.join(table_dir, snap["cdf_path"])
+            parts.append(
+                stamp(read_vintage(lake.spark, [cdf_path], schema, vintage, [ct]))
             )
-            parts.append(stamp(cdf))
         inline_rows = [
-            {"change_type": "insert", "values": r["values"]}
+            ("insert", r["values"])
             for r in snap.get("inline_add", [])
             if op == "INSERT"
-        ] + list(snap.get("inline_changes", []))
+        ] + [(c["change_type"], c["values"]) for c in snap.get("inline_changes", [])]
         if inline_rows:
+            phys, fills = vintage
             data = [
-                tuple(
-                    from_json_value(
-                        r["values"].get(end_state.physical_name(f.name, v)),
-                        f.dataType,
-                    )
-                    for f in schema.fields
-                )
-                + (r["change_type"],)
-                for r in inline_rows
+                inline_values(vals, schema, phys) + (change_type,)
+                for change_type, vals in inline_rows
             ]
-            cdf_schema = T.StructType(
-                list(schema.fields) + [T.StructField("_change_type", T.StringType())]
-            )
-            parts.append(stamp(_local_df(lake.spark, data, cdf_schema)))
+            df = _local_df(lake.spark, data, T.StructType(schema.fields + [ct]))
+            parts.append(stamp(_fill(df, schema, fills)))
 
-    if not parts:
-        return _local_df(lake.spark, [], out_schema)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _union(parts) if parts else _local_df(lake.spark, [], out_schema)
 
 
 def _derive_dv_deletions(
-    lake: "Lake", name: str, log, snap: dict, v: int, end_state, schema,
-    table_dir: str,
+    lake: "Lake", log, snap: dict, v: int, end_state, schema, table_dir: str
 ) -> DataFrame:
-    """Deleted rows of a DV-mode DELETE snapshot, reconstructed from
-    positions: read the touched data files under the PRE-delete state
-    (prior DVs subtracted, renames and initial defaults applied by
-    ``Lake._read_files`` exactly as the original scan saw them),
-    semi-join the delta positions, then map the v-vintage column names
-    forward to the feed's end-schema names (same walk as read_mapped)."""
+    """Deleted rows of a DV-mode DELETE snapshot: the delta positions
+    (this snapshot's cumulative DV minus the prior one) semi-joined into
+    the touched files, read under the feed's end schema. The files are
+    read without their prior DVs: a delta position is never in one."""
     files = sorted({d["file"] for d in snap["dv"]})
     new_paths = sorted(
         {os.path.join(table_dir, d["path"]) for d in snap["dv"]}
@@ -225,28 +176,19 @@ def _derive_dv_deletions(
             .filter(F.col("file").isin(list(old)))
         )
         delta = newp.join(oldp, ["file", "row_index"], "left_anti")
-    schema_v = prior.schema_at(v - 1)
-    rows = lake._read_files(
-        name, prior, schema_v, rels=files, keep_meta=True
+    # The end state's vintage rule over the touched files (they may be
+    # gone from the end state), with no DVs to subtract.
+    touched = dataclasses.replace(
+        end_state, files={f: prior.files[f] for f in files}, dvs={}
     )
+    rows = read_files(lake.spark, table_dir, touched, schema, keep_meta=True)
     pos = delta.select(
         lake._uri_col(table_dir, files, "file").alias("_dl_fp"),
         F.col("row_index").alias("_dl_ri"),
     )
-    deleted = rows.join(
+    return rows.join(
         F.broadcast(pos), ["_dl_fp", "_dl_ri"], "left_semi"  # bcast-ok: bounded by this snapshot's delete volume
     ).drop("_dl_fp", "_dl_ri")
-    current_names = tuple(f.name for f in schema.fields)
-    phys = tuple(end_state.physical_name(c, v) for c in current_names)
-    claimed = {p for c, p in zip(current_names, phys) if p != c}
-    cols = set(deleted.columns)
-    proj = []
-    for f, p in zip(schema.fields, phys):
-        if (p == f.name and p in claimed) or p not in cols:
-            proj.append(F.lit(None).cast(f.dataType).alias(f.name))
-        else:
-            proj.append(F.col(p).cast(f.dataType).alias(f.name))
-    return deleted.select(*proj)
 
 
 def table_insertions(lake: "Lake", name: str, start, end=None) -> DataFrame:

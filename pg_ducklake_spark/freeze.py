@@ -35,6 +35,7 @@ import duckdb
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from pg_ducklake_spark.catalog import FileEntry, TableState
 from pg_ducklake_spark.errors import LakeError, ReadOnlyError, TableNotFoundError
 
 if TYPE_CHECKING:
@@ -89,7 +90,8 @@ def freeze_lake(lake: "Lake", out_path: str) -> None:
             table_id BIGINT, sort_key_index BIGINT, expression VARCHAR,
             sort_direction VARCHAR, null_order VARCHAR);
         CREATE TABLE ducklake_inlined_data(
-            table_id BIGINT, row_id BIGINT, values_json VARCHAR);
+            table_id BIGINT, row_id BIGINT, values_json VARCHAR,
+            begin_snapshot BIGINT);
         CREATE TABLE ducklake_table_stats(
             table_id BIGINT, snapshot_id BIGINT, row_count BIGINT);
         CREATE TABLE ducklake_table_column_stats(
@@ -324,19 +326,15 @@ def freeze_lake(lake: "Lake", out_path: str) -> None:
         # ducklake_inlined_data_tables but leaves them EMPTY
         # (src/pgducklake_freeze.cpp:100-105); both exist above with
         # zero rows. Inlined *rows* must still survive the round trip,
-        # so they are exported as JSON rows in ducklake_inlined_data.
+        # so they are exported as JSON rows in ducklake_inlined_data,
+        # keyed by their insert-time names with their begin snapshot
+        # (like upstream's inlined-data tables), so the frozen reader
+        # maps them through the same vintage rule as the live one.
         for r in state.inline_rows:
-            # Materialize renames at freeze time: inline values are
-            # keyed by their insert-time names; re-key them to the
-            # current schema so the frozen reader needs no mapping.
-            bs = r.get("begin_snapshot", 0)
-            vals = {
-                f.name: r["values"].get(state.physical_name(f.name, bs))
-                for f in state.schema.fields
-            }
             con.execute(
-                "INSERT INTO ducklake_inlined_data VALUES (?, ?, ?)",
-                [tid, r["row_id"], json.dumps(vals)],
+                "INSERT INTO ducklake_inlined_data VALUES (?, ?, ?, ?)",
+                [tid, r["row_id"], json.dumps(r["values"]),
+                 r.get("begin_snapshot", 0)],
             )
         # tags / COMMENT metadata (≙ ducklake_tag / ducklake_column_tag,
         # src/pgducklake_freeze.cpp:38-39)
@@ -386,6 +384,93 @@ def _is_url(path: str) -> bool:
     return path.startswith(("http://", "https://"))
 
 
+def _fetch(con, sql: str, params: list, default=None) -> list | None:
+    """Rows of ``sql``, or ``default`` when the frozen file predates
+    the table or column it reads."""
+    try:
+        return con.execute(sql, params).fetchall()
+    except (duckdb.BinderException, duckdb.CatalogException):
+        return default
+
+
+def _frozen_state(con, tid: int, relpath: str, snap: int) -> TableState:
+    """A frozen table's catalog rows as the ``TableState`` a live
+    reader would replay: files keyed by their path under the table
+    directory, DVs, renames, each column's add snapshot and initial
+    default, and inline rows with their begin snapshots."""
+    cols = _fetch(
+        con,
+        "SELECT column_name, column_type, nulls_allowed, begin_snapshot,"
+        " initial_default FROM ducklake_column WHERE table_id = ?"
+        " ORDER BY column_order",
+        [tid],
+    ) or [  # older frozen files
+        (c, ty, nl, 0, None)
+        for c, ty, nl in con.execute(
+            "SELECT column_name, column_type, nulls_allowed"
+            " FROM ducklake_column WHERE table_id = ? ORDER BY column_order",
+            [tid],
+        ).fetchall()
+    ]
+    schema = T.StructType([
+        T.StructField(
+            c, T._parse_datatype_string(ty), nl,
+            {"initial_default": d} if d is not None else None,
+        )
+        for c, ty, nl, _bs, d in cols
+    ])
+    starts = dict(_fetch(
+        con, "SELECT path, row_id_start FROM ducklake_data_file"
+        " WHERE table_id = ?", [tid], [],
+    ))
+    files = {}
+    for path, rows, nbytes, bs, pvals, stats in con.execute(
+        "SELECT path, rows, bytes, begin_snapshot, partition_values, stats"
+        " FROM ducklake_data_file WHERE table_id = ?", [tid]
+    ).fetchall():
+        rel = os.path.relpath(path, relpath)
+        files[rel] = FileEntry(
+            path=rel, rows=rows, bytes=nbytes,
+            stats=json.loads(stats or "{}"),
+            partition_values=json.loads(pvals or "{}"),
+            begin_snapshot=bs, row_id_start=starts.get(path),
+        )
+    dvs = {
+        f: {"path": os.path.relpath(p, relpath), "deleted": n}
+        for f, p, n in _fetch(
+            con, "SELECT data_file_path, delete_file_path, deleted"
+            " FROM ducklake_delete_file WHERE table_id = ?", [tid], [],
+        )
+    }
+    renames = _fetch(
+        con, "SELECT snapshot_id, old_name, new_name FROM ducklake_name_mapping"
+        " WHERE table_id = ? ORDER BY snapshot_id", [tid], [],
+    )
+    inline = _fetch(
+        con, "SELECT row_id, begin_snapshot, values_json"
+        " FROM ducklake_inlined_data WHERE table_id = ? ORDER BY row_id", [tid],
+    )
+    if inline is None:  # older frozen files keyed values by current names
+        inline = [
+            (rid, snap, vals) for rid, vals in con.execute(
+                "SELECT row_id, values_json FROM ducklake_inlined_data"
+                " WHERE table_id = ? ORDER BY row_id", [tid],
+            ).fetchall()
+        ]
+    return TableState(
+        snapshot_id=snap,
+        schema=schema,
+        files=files,
+        dvs=dvs,
+        inline_rows=[
+            {"row_id": rid, "begin_snapshot": bs, "values": json.loads(vals)}
+            for rid, bs, vals in inline
+        ],
+        renames=[list(r) for r in renames],
+        column_adds={c: bs for c, _ty, _nl, bs, _d in cols},
+    )
+
+
 class FrozenLake:
     """Read-only lake served from a frozen DuckDB metadata file.
 
@@ -424,109 +509,33 @@ class FrozenLake:
         self.data_root = data_root or meta.get("data_root", os.path.dirname(frozen_path))
         self._tables: dict[str, dict] = {}
         try:
-            rows = con.execute(
+            tables = con.execute(
                 "SELECT t.table_id,"
                 " CASE WHEN s.schema_name = 'main' THEN t.table_name"
-                " ELSE s.schema_name || '.' || t.table_name END"
+                " ELSE s.schema_name || '.' || t.table_name END,"
+                " t.path, t.current_snapshot"
                 " FROM ducklake_table t"
                 " JOIN ducklake_schema s USING (schema_id)"
             ).fetchall()
         except (duckdb.BinderException, duckdb.CatalogException):
             # pre-namespace frozen files: flat table list
-            rows = con.execute(
-                "SELECT table_id, table_name FROM ducklake_table"
+            tables = con.execute(
+                "SELECT table_id, table_name, path, current_snapshot"
+                " FROM ducklake_table"
             ).fetchall()
-        for tid, name in rows:
-            try:
-                cols = con.execute(
-                    "SELECT column_name, column_type, nulls_allowed,"
-                    " begin_snapshot, initial_default FROM ducklake_column"
-                    " WHERE table_id = ? ORDER BY column_order",
-                    [tid],
-                ).fetchall()
-            except duckdb.BinderException:  # older frozen files
-                cols = [
-                    (c, ty, nl, 0, None)
-                    for c, ty, nl in con.execute(
-                        "SELECT column_name, column_type, nulls_allowed"
-                        " FROM ducklake_column WHERE table_id = ?"
-                        " ORDER BY column_order",
-                        [tid],
-                    ).fetchall()
-                ]
-            files = con.execute(
-                "SELECT path, begin_snapshot FROM ducklake_data_file"
-                " WHERE table_id = ?", [tid]
-            ).fetchall()
-            try:
-                rid_starts = dict(
-                    con.execute(
-                        "SELECT path, row_id_start FROM ducklake_data_file"
-                        " WHERE table_id = ?", [tid]
-                    ).fetchall()
-                )
-            except duckdb.BinderException:  # pre-rowid frozen files
-                rid_starts = {}
-            inline = con.execute(
-                "SELECT values_json, row_id FROM ducklake_inlined_data"
-                " WHERE table_id = ? ORDER BY row_id",
-                [tid],
-            ).fetchall()
-            try:
-                dvs = con.execute(
-                    "SELECT data_file_path, delete_file_path FROM"
-                    " ducklake_delete_file WHERE table_id = ?",
-                    [tid],
-                ).fetchall()
-            except duckdb.CatalogException:  # older frozen files
-                dvs = []
-            try:
-                dv_rows = con.execute(
+        for tid, name, relpath, snap in tables:
+            self._tables[name] = {
+                "state": _frozen_state(con, tid, relpath, snap),
+                "relpath": relpath,
+                # deleted positions embedded in the frozen file; None in
+                # files that predate the embedding
+                "dv_rows": _fetch(
+                    con,
                     "SELECT data_file_path, row_index FROM ducklake_dv_rows"
                     " WHERE table_id = ?",
                     [tid],
-                ).fetchall()
-            except duckdb.CatalogException:  # pre-embedding frozen files
-                dv_rows = None
-            try:
-                renames = con.execute(
-                    "SELECT snapshot_id, old_name, new_name FROM"
-                    " ducklake_name_mapping WHERE table_id = ?"
-                    " ORDER BY snapshot_id",
-                    [tid],
-                ).fetchall()
-            except duckdb.CatalogException:  # pre-mapping frozen files
-                renames = []
-            try:
-                fstats: dict = {}
-                for fp, cname, nulls, mnj, mxj in con.execute(
-                    "SELECT data_file_path, column_name, null_count,"
-                    " min_value, max_value FROM ducklake_file_column_stats"
-                    " WHERE table_id = ?",
-                    [tid],
-                ).fetchall():
-                    fstats.setdefault(fp, {})[cname] = {
-                        "min": json.loads(mnj), "max": json.loads(mxj),
-                        "nulls": nulls,
-                    }
-                fpvals: dict = {}
-                for fp, _i, pk, pv in con.execute(
-                    "SELECT data_file_path, partition_key_index,"
-                    " partition_key, partition_value"
-                    " FROM ducklake_file_partition_value WHERE table_id = ?",
-                    [tid],
-                ).fetchall():
-                    fpvals.setdefault(fp, {})[pk] = pv
-            except duckdb.CatalogException:  # pre-stats frozen files
-                fstats, fpvals = {}, {}
-            self._tables[name] = {"file_stats": fstats, "file_pvals": fpvals,
-                                  "cols": cols, "files": files,
-                                  "rid_starts": rid_starts,
-                                  "inline": [json.loads(r[0]) for r in inline],
-                                  "inline_rids": [r[1] for r in inline],
-                                  "dvs": dvs, "dv_rows": dv_rows,
-                                  "renames": renames,
-                                  "name": name}
+                ),
+            }
         self._views: dict[str, dict] = {}
         self._macros: dict[str, dict] = {}
         try:
@@ -596,55 +605,19 @@ class FrozenLake:
     def list_tables(self) -> list[str]:
         return sorted(self._tables)
 
-    def _schema(self, name: str) -> T.StructType:
-        return T.StructType(
-            [
-                T.StructField(c, T._parse_datatype_string(ty), nulls)
-                for c, ty, nulls, _bs, _d in self._tables[name]["cols"]
-            ]
-        )
-
-    def prune_files(self, name: str, where: str) -> list[str]:
-        """File paths that may match ``where``, pruned with the frozen
-        ducklake_file_column_stats / ducklake_file_partition_value
-        tables (the reference freezes the same stats so external
-        readers can skip files, src/pgducklake_freeze.cpp:42,48)."""
-        from pg_ducklake_spark.catalog import FileEntry
-        from pg_ducklake_spark.operators.pruning import prune_files as _prune
-
+    def _table(self, name: str) -> dict:
         if name not in self._tables:
             raise TableNotFoundError(f"table {name!r} not in frozen lake")
-        info = self._tables[name]
-        renames = info.get("renames") or []
-        cols = self._schema(name)
+        return self._tables[name]
 
-        class _Shim:
-            schema = cols
-            files = {
-                p: FileEntry(
-                    path=p,
-                    rows=0,
-                    bytes=0,
-                    stats=info.get("file_stats", {}).get(p, {}),
-                    partition_values=info.get("file_pvals", {}).get(p, {}),
-                    begin_snapshot=bs,
-                )
-                for p, bs in info["files"]
-            }
+    def prune_files(self, name: str, where: str) -> list[str]:
+        """File paths (relative to the table) that may match ``where``,
+        pruned with the frozen per-file stats and partition values (the
+        reference freezes them so external readers can skip files,
+        src/pgducklake_freeze.cpp:42,48)."""
+        from pg_ducklake_spark.operators.pruning import prune_files
 
-            @staticmethod
-            def physical_name(col: str, file_bs: int) -> str:
-                for _sid, old_n, new_n in reversed(renames):
-                    if _sid > file_bs and col == new_n:
-                        col = old_n
-                return col
-
-            @staticmethod
-            def added_at(col: str) -> int:
-                return adds.get(col, 0)
-
-        adds = {c: bs for c, _ty, _nl, bs, _d in info["cols"]}
-        return _prune(_Shim(), where)
+        return prune_files(self._table(name)["state"], where)
 
     def scan(
         self, name: str, where: str | None = None, with_rowid: bool = False
@@ -654,223 +627,48 @@ class FrozenLake:
         the full predicate is always re-applied."""
         if not where:
             return self.table(name, with_rowid=with_rowid)
-        keep = set(self.prune_files(name, where))
+        keep = self.prune_files(name, where)
         return self.table(name, _rels=keep, with_rowid=with_rowid).filter(where)
 
     def table(
-        self, name: str, _rels: set | None = None, with_rowid: bool = False
+        self, name: str, _rels: list | None = None, with_rowid: bool = False
     ) -> DataFrame:
-        from pyspark.sql import functions as F
+        """The table's rows, read like a live table's (``table_rows``)."""
+        from pg_ducklake_spark.lake import Lake, _local_df, table_rows
 
-        from pg_ducklake_spark.lake import Lake, _local_df
-
-        if name not in self._tables:
-            raise TableNotFoundError(f"table {name!r} not in frozen lake")
-        info = self._tables[name]
-        if with_rowid:
-            if info["files"] and not info.get("rid_starts"):
-                raise LakeError(
-                    "frozen file predates rowid lineage (no row_id_start in "
-                    "ducklake_data_file); re-freeze the source lake"
-                )
-            if any(c == "rowid" for c, *_ in info["cols"]):
-                raise LakeError(
-                    "with_rowid=True clashes with an existing 'rowid' column"
-                )
-        if _rels is not None:
-            info = dict(
-                info,
-                files=[(p, bs) for p, bs in info["files"] if p in _rels],
+        t = self._table(name)
+        state = t["state"]
+        if with_rowid and any(
+            fe.row_id_start is None for fe in state.files.values()
+        ):
+            raise LakeError(
+                "frozen file predates rowid lineage (no row_id_start in "
+                "ducklake_data_file); re-freeze the source lake"
             )
-        schema = self._schema(name)
-        # Initial defaults: files older than a defaulted column read the
-        # default, not NULL (same per-file-age grouping as Lake).
-        fills = {
-            c: (bs, d) for c, _ty, _nl, bs, d in info["cols"] if d is not None
-        }
         if self._http_root is not None:
-            for path, _bs in info["files"]:
-                self._ensure_local(path)
-            if info.get("dvs") and info.get("dv_rows") is None:
+            for rel in state.files if _rels is None else _rels:
+                self._ensure_local(os.path.join(t["relpath"], rel))
+            if state.dvs and t["dv_rows"] is None:
                 raise LakeError(
                     "frozen file predates embedded delete positions "
                     "(ducklake_dv_rows); re-freeze it to attach over http"
                 )
-        renames = info.get("renames") or []
-
-        def physical_name(col: str, file_bs: int) -> str:
-            # Same walk as TableState.physical_name: undo every rename
-            # committed after the file was written.
-            for _sid, old, new in reversed(renames):
-                if _sid > file_bs and col == new:
-                    col = old
-            return col
-
-        current_names = tuple(f.name for f in schema.fields)
-        adds = {c: bs for c, _ty, _nl, bs, _d in info["cols"]}
-        groups: dict[tuple, list[str]] = {}
-        for path, file_bs in info["files"]:
-            missing = tuple(
-                c for c, (add_bs, _d) in fills.items() if file_bs < add_bs
-            )
-            # A column added after the file maps to None: the file may
-            # hold a dropped column of the same name (as in Lake._read_files).
-            phys = tuple(
-                physical_name(c, file_bs) if adds[c] <= file_bs else None
-                for c in current_names
-            )
-            groups.setdefault((missing, phys), []).append(path)
-        has_dvs = bool(info.get("dvs"))
-        need_meta = has_dvs or with_rowid
-        parts = []
-        for (missing, phys), group_paths in sorted(groups.items(), key=lambda kv: repr(kv[0])):
-            paths = [os.path.join(self.data_root, p) for p in group_paths]
-            if phys == current_names:
-                g = self.spark.read.schema(schema).parquet(*paths)
-                if need_meta:
-                    # _metadata must be captured per scan, pre-union
-                    g = g.select(
-                        "*",
-                        F.col("_metadata.file_path").alias("_fp"),
-                        F.col("_metadata.row_index").alias("_ri"),
-                    )
-            else:
-                # Files predating a rename store the old column name:
-                # read under physical names, alias back (same dup-guard
-                # as Lake._read_files — a clashing re-added column
-                # cannot exist in these older files).
-                from pyspark.sql import types as T2
-
-                claimed = {
-                    p for c, p in zip(current_names, phys)
-                    if p is not None and p != c
-                }
-                read_fields, aliases = [], []
-                for f, p in zip(schema.fields, phys):
-                    if p is None or (p == f.name and p in claimed):
-                        aliases.append((None, f))
-                        continue
-                    read_fields.append(T2.StructField(p, f.dataType, True))
-                    aliases.append((p, f))
-                g = self.spark.read.schema(
-                    T2.StructType(read_fields)
-                ).parquet(*paths)
-                proj = [
-                    (
-                        F.col(p).alias(f.name)
-                        if p is not None
-                        else F.lit(None).cast(f.dataType).alias(f.name)
-                    )
-                    for p, f in aliases
-                ]
-                if need_meta:
-                    proj += [
-                        F.col("_metadata.file_path").alias("_fp"),
-                        F.col("_metadata.row_index").alias("_ri"),
-                    ]
-                g = g.select(*proj)
-            for c in missing:
-                dtype = next(
-                    T._parse_datatype_string(ty)
-                    for cc, ty, _nl, _bs, _d in info["cols"] if cc == c
+        dv_rows = None
+        if state.dvs and t["dv_rows"] is not None:
+            # An EMPTY embedded set alongside recorded delete files
+            # means the freeze-time embed missed — erroring beats
+            # silently resurrecting rows.
+            if not t["dv_rows"]:
+                raise LakeError(
+                    f"frozen table {name!r} records delete files but "
+                    "embeds no deleted positions; the frozen file is "
+                    "inconsistent (re-freeze the source lake)"
                 )
-                g = g.withColumn(c, F.expr(fills[c][1]).cast(dtype))
-            parts.append(g)
-        if parts:
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
-        else:
-            df = _local_df(self.spark, [], schema)
-            if need_meta:
-                df = df.withColumn(
-                    "_fp", F.lit(None).cast("string")
-                ).withColumn("_ri", F.lit(None).cast("long"))
-        if info.get("dvs"):
-            from pyspark.sql import functions as F
-            from pyspark.sql import types as T2
-
-            dv_schema = T2.StructType(
-                [
-                    T2.StructField("file", T2.StringType()),
-                    T2.StructField("row_index", T2.LongType()),
-                ]
-            )
-            if info.get("dv_rows") is not None:
-                # Positions embedded in the frozen file (self-contained
-                # static layout; the DV set is delete-ratio bounded, so
-                # it broadcasts). An EMPTY embedded set alongside
-                # recorded delete files means the freeze-time embed
-                # missed — erroring beats silently resurrecting rows.
-                if not info["dv_rows"]:
-                    raise LakeError(
-                        f"frozen table {name!r} records delete files but "
-                        "embeds no deleted positions; the frozen file is "
-                        "inconsistent (re-freeze the source lake)"
-                    )
-                dv = _local_df(
-                    self.spark,
-                    [(f, int(ri)) for f, ri in info["dv_rows"]],
-                    dv_schema,
-                )
-            else:  # pre-embedding frozen files: read the DV parquet
-                dv_paths = sorted(
-                    {os.path.join(self.data_root, p) for _f, p in info["dvs"]}
-                )
-                dv = (
-                    self.spark.read.schema(dv_schema)
-                    .parquet(*dv_paths)
-                    .filter(F.col("file").isin([f for f, _p in info["dvs"]]))
-                )
-            dv = dv.select(
-                Lake._uri_col(
-                    f"{self.data_root}/{name}", [f for f, _p in info["dvs"]], "file"
-                ).alias("_fp"),
-                F.col("row_index").alias("_ri"),
-            )
-            df = df.join(F.broadcast(dv), ["_fp", "_ri"], "left_anti")  # bcast-ok: per-file delete vector, bounded by max file rows
-        if with_rowid:
-            # rowid = frozen row_id_start + parquet row_index (the same
-            # metadata-sized broadcast map Lake._attach_rowid uses).
-            starts = [
-                (Lake._file_uri(f"{self.data_root}/{p}"), info["rid_starts"].get(p))
-                for p, _bs in info["files"]
-            ]
-            sdf = _local_df(
-                self.spark, starts,
-                T.StructType([
-                    T.StructField("_fp", T.StringType()),
-                    T.StructField("_dl_start", T.LongType()),
-                ]),
-            )
-            df = (
-                df.join(F.broadcast(sdf), "_fp", "left")  # bcast-ok: one row per data file (metadata-sized)
-                .withColumn("rowid", F.col("_dl_start") + F.col("_ri"))
-                .drop("_dl_start")
-            )
-        if need_meta:
-            df = df.drop("_fp", "_ri")
-        if info["inline"]:
-            from pg_ducklake_spark.catalog import from_json_value
-
-            data = [
-                tuple(
-                    from_json_value(vals.get(f.name), f.dataType)
-                    for f in schema.fields
-                )
-                + ((rid,) if with_rowid else ())
-                for vals, rid in zip(info["inline"], info["inline_rids"])
-            ]
-            inline_schema = schema
-            if with_rowid:
-                from pyspark.sql import types as T3
-
-                inline_schema = T3.StructType(
-                    list(schema.fields)
-                    + [T3.StructField("rowid", T3.LongType())]
-                )
-            df = df.unionByName(_local_df(self.spark, data, inline_schema))
-        return df
+            dv_rows = _local_df(self.spark, t["dv_rows"], Lake._DV_SCHEMA)
+        return table_rows(
+            self.spark, os.path.join(self.data_root, t["relpath"]), state,
+            state.schema, _rels, with_rowid, dv_rows=dv_rows,
+        )
 
     def views(self) -> dict:
         return dict(self._views)

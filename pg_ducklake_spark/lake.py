@@ -485,6 +485,395 @@ def _local_df(
     return spark.createDataFrame(table, schema=schema)
 
 
+# ------------------------------------------------------------- read path
+#
+# Every reader turns files and inline rows into rows through the
+# functions below: live tables (Lake), frozen exports (FrozenLake), the
+# change feed and DML. Each piece of data is mapped to the reader's
+# schema through TableState.vintage, the one copy of the vintage rule.
+
+# Above this many catalog-recorded deleted positions in one scan, the
+# DV anti-join drops its broadcast hint (64M * 8 B packed keys ≈ 512 MB
+# — comfortably under Spark's 8 GB broadcast hard limit and typical
+# driver memory, while still broadcasting every vacuum-bounded
+# steady-state DV).
+DV_BROADCAST_MAX_POSITIONS = 64_000_000
+
+
+def _by_vintage(
+    state: TableState, schema: T.StructType, items: Iterable, begin_snapshot
+) -> dict[tuple, list]:
+    """``items`` grouped by ``state.vintage(schema, begin_snapshot(item))``.
+    The group count is bounded by the ALTERs, not by the item count."""
+    vintages: dict[int, tuple] = {}
+    groups: dict[tuple, list] = {}
+    for item in items:
+        bs = begin_snapshot(item)
+        if bs not in vintages:
+            vintages[bs] = state.vintage(schema, bs)
+        groups.setdefault(vintages[bs], []).append(item)
+    return dict(sorted(groups.items(), key=lambda kv: repr(kv[0])))
+
+
+def _fill(df: DataFrame, schema: T.StructType, fills) -> DataFrame:
+    """Set each ``(column, initial_default)`` of ``fills`` on ``df``."""
+    for c, expr in fills:
+        df = df.withColumn(c, F.expr(expr).cast(schema[c].dataType))
+    return df
+
+
+def _union(parts: list[DataFrame]) -> DataFrame:
+    df = parts[0]
+    for p in parts[1:]:
+        df = df.unionByName(p)
+    return df
+
+
+def inline_values(values: dict, schema: T.StructType, phys) -> tuple:
+    """One inline row's JSON ``values`` (keyed by the names of its
+    vintage) under ``schema``, given that vintage's physical names."""
+    return tuple(
+        from_json_value(values.get(p) if p is not None else None, f.dataType)
+        for f, p in zip(schema.fields, phys)
+    )
+
+
+def read_vintage(
+    spark: SparkSession,
+    paths: list[str],
+    schema: T.StructType,
+    vintage: tuple,
+    extra: list[T.StructField] = (),
+    meta: list[Column] = (),
+) -> DataFrame:
+    """Parquet files that share one ``vintage`` (``TableState.vintage``)
+    as rows under ``schema``, followed by the ``extra`` fields (read as
+    stored) and the ``meta`` columns (``_metadata`` of this scan, which
+    must be taken before any union)."""
+    phys, fills = vintage
+    if phys == tuple(schema.names):
+        df = spark.read.schema(
+            T.StructType(list(schema.fields) + list(extra))
+        ).parquet(*paths)
+        if meta:
+            df = df.select("*", *meta)
+    else:
+        # Read under the physical names, then alias back to the
+        # current names; a column the vintage lacks reads NULL (or its
+        # initial_default fill below).
+        df = spark.read.schema(
+            T.StructType(
+                [
+                    T.StructField(p, f.dataType, True)
+                    for f, p in zip(schema.fields, phys)
+                    if p is not None
+                ]
+                + list(extra)
+            )
+        ).parquet(*paths)
+        df = df.select(
+            *[
+                F.col(p).alias(f.name)
+                if p is not None
+                else F.lit(None).cast(f.dataType).alias(f.name)
+                for f, p in zip(schema.fields, phys)
+            ],
+            *[F.col(x.name) for x in extra],
+            *meta,
+        )
+    return _fill(df, schema, fills)
+
+
+def read_files(
+    spark: SparkSession,
+    table_dir: str,
+    state: TableState,
+    schema: T.StructType,
+    rels: list[str] | None = None,
+    keep_meta: bool = False,
+    dv_rows: DataFrame | None = None,
+    dv_keys: Callable[[Callable[[], DataFrame]], DataFrame] | None = None,
+    dv_broadcast_max: int = DV_BROADCAST_MAX_POSITIONS,
+) -> DataFrame:
+    """Data files of ``state`` (``rels`` only, when given; paths relative
+    to ``table_dir``) under ``schema``, subtracting positional delete
+    files (≙ ducklake_delete_file) via a broadcast anti-join on a packed
+    (file id, _metadata.row_index) LONG — file ids resolved per row by a
+    numeric ``_metadata.file_size`` join when the catalog sizes are
+    unique, else by the file_path string (see the size_ok comment
+    below). Files without a DV bypass the join entirely.
+
+    ``dv_rows`` holds the deleted positions as (file, row_index) rows;
+    when None they are read from the DV parquet files the state names.
+    ``dv_keys(build)`` may return a cached packed key set in place of
+    ``build()`` (``Lake`` caches it per table snapshot for full scans).
+    ``keep_meta`` keeps ``_dl_fp`` / ``_dl_ri`` (file URI, row index)."""
+    rels = sorted(state.files) if rels is None else sorted(rels)
+    meta = [
+        F.col("_metadata.file_path").alias("_dl_fp"),
+        F.col("_metadata.row_index").alias("_dl_ri"),
+    ]
+    if not rels:
+        df = _local_df(spark, [], schema)
+        if keep_meta:
+            df = df.withColumn("_dl_fp", F.lit(None).cast("string")).withColumn(
+                "_dl_ri", F.lit(None).cast("long")
+            )
+        return df
+    applicable = {f: d for f, d in state.dvs.items() if f in set(rels)}
+    groups = _by_vintage(
+        state, schema, rels, lambda r: state.files[r].begin_snapshot
+    )
+    # r11: the DV subtraction applies ONLY to files that have a DV
+    # — clean files (the steady state after vacuum, and everything
+    # a delete never touched) union straight through with zero
+    # join machinery, so DV read overhead is proportional to the
+    # DV'd file set, not the table. Previously every scan of a
+    # table with ANY delete paid per-row _metadata.file_path
+    # string materialization + a (string, long)-keyed anti-join
+    # over all rows.
+    dv_set = set(applicable)
+    # r11b: resolve file ids on the probe side by joining on
+    # _metadata.file_size (one LONG per row) instead of the
+    # file_path string whenever the catalog-recorded sizes of this
+    # scan's DV'd files are unique. A string join key forces an
+    # UnsafeRow copy of the ~100-byte path per probe row — measured
+    # ~0.7 s of pure overhead on a 10M-row masked scan where the
+    # numeric form runs at the raw-scan floor (0.9 s → 0.23 s for
+    # the resolve join; 1.25 s → 0.52 s full masked scan).
+    # Uniqueness is checked driver-side against FileEntry.bytes
+    # (recorded via os.path.getsize at commit, which is what
+    # _metadata.file_size reports); any collision or missing size
+    # falls back to the string-keyed form.
+    fids = sorted(applicable)
+    sizes = {
+        r: state.files[r].bytes
+        for r in fids
+        if r in state.files and state.files[r].bytes
+    }
+    size_ok = (
+        len(sizes) == len(fids)
+        and len(set(sizes.values())) == len(fids)
+        # the packed-key form needs _dl_fp when fid overflows the
+        # pack (>8M DV'd files) — keep the string columns then
+        and len(fids) < (1 << 23)
+    )
+    # The size-keyed join resolves file ids through
+    # _metadata.file_size == FileEntry.bytes. That invariant holds
+    # because bytes is recorded via os.path.getsize at commit — but
+    # if any future registration path ever records bytes from
+    # another source, the left join would yield a null _dl_fid and
+    # the anti-join would silently KEEP deleted rows. Guard it here
+    # with one stat per DV'd file (metadata-scale) and fall back to
+    # the path-string join on any mismatch: wrong-but-slower is
+    # acceptable, wrong-results-silently is not.
+    if size_ok:
+        try:
+            size_ok = all(
+                os.path.getsize(os.path.join(table_dir, r)) == sizes[r]
+                for r in fids
+            )
+        except OSError:
+            size_ok = False
+    # Broadcast guard for the DV anti-join (the one read-path
+    # construct with a hard cliff at scale): the packed key set is
+    # 8 B per deleted position, and Spark's broadcast hard limit is
+    # 8 GB — a mass DELETE between vacuums (e.g. 20% of a 10B-row
+    # table = 2B positions = 16 GB packed) would OOM the driver.
+    # The catalog records the cumulative DV position count per file
+    # at commit, so the scan knows the total at plan time for free;
+    # above the threshold (~512 MB packed) the hint is dropped and
+    # the packed-LONG anti-join runs sort-merge/shuffled-hash under
+    # AQE. The reference has no such cliff because DuckDB applies
+    # delete files per-file (src/pgducklake_freeze.cpp:43).
+    total_dv_positions = sum(int(d.get("deleted", 0)) for d in applicable.values())
+    dv_bcast = total_dv_positions <= dv_broadcast_max
+    dv_meta = (meta if keep_meta or not size_ok else meta[1:]) + (
+        [F.col("_metadata.file_size").alias("_dl_sz")] if size_ok else []
+    )
+    parts, parts_dvd = [], []
+    for vintage, group_rels in groups.items():
+        clean = [r for r in group_rels if r not in dv_set]
+        dvd = [r for r in group_rels if r in dv_set]
+        if clean:
+            parts.append(read_vintage(
+                spark, [os.path.join(table_dir, p) for p in clean], schema,
+                vintage, meta=meta if keep_meta else (),
+            ))
+        if dvd:
+            parts_dvd.append(read_vintage(
+                spark, [os.path.join(table_dir, p) for p in dvd], schema,
+                vintage, meta=dv_meta,
+            ))
+    if parts_dvd:
+        masked = _union(parts_dvd)
+        if dv_rows is None:
+            dv_rows = spark.read.schema(Lake._DV_SCHEMA).parquet(
+                *sorted(
+                    {os.path.join(table_dir, d["path"]) for d in applicable.values()}
+                )
+            )
+        dv = dv_rows.filter(F.col("file").isin(list(applicable)))
+        # Anti-join on a packed single LONG (fid * 2^40 + row_index
+        # — a bijection, not a hash: row_index within one parquet
+        # file is < 2^40 always, and fid is a dense index over this
+        # scan's DV'd files) instead of the (path-string, long)
+        # pair: the string-keyed form broadcast a ~100-byte path
+        # per deleted position and hashed a path string per probe
+        # row. The file→fid maps are `_local_df` LocalRelations,
+        # never createDataFrame(list), whose Python-RDD scan pays a
+        # Python-worker round trip on every execution. Together
+        # with the clean-file split: 2.3 s →
+        # ~0.7 s for count+sum over 10M rows with 5% deleted;
+        # the size-keyed resolve (r11b, see size_ok above) takes
+        # the same scan to ~0.5 s.
+        if len(fids) < (1 << 23):
+            pack = F.shiftleft(F.col("_dl_fid"), 40)
+            fid = T.StructField("_dl_fid", T.LongType(), False)
+
+            def build() -> DataFrame:
+                relmap = _local_df(
+                    spark, [(rel, i) for i, rel in enumerate(fids)],
+                    T.StructType([T.StructField("file", T.StringType()), fid]),
+                )
+                return (
+                    dv.join(F.broadcast(relmap), "file")  # bcast-ok: one row per data file (metadata-sized)
+                    .select((pack + F.col("row_index")).alias("_dl_key"))
+                )
+
+            # fids is sorted(applicable), deterministic for a given
+            # state, so a cached key set stays consistent with this
+            # call's probe-side fid map.
+            dvk = dv_keys(build) if dv_keys is not None else build()
+            if size_ok:
+                on, fmap = "_dl_sz", [(sizes[rel], i) for i, rel in enumerate(fids)]
+                on_type = T.LongType()
+            else:
+                on, on_type = "_dl_fp", T.StringType()
+                fmap = [
+                    (Lake._file_uri(f"{table_dir}/{rel}"), i)
+                    for i, rel in enumerate(fids)
+                ]
+            fmap = _local_df(
+                spark, fmap, T.StructType([T.StructField(on, on_type), fid])
+            )
+            masked = (
+                masked.join(F.broadcast(fmap), on, "left")  # bcast-ok: one row per data file (metadata-sized)
+                .withColumn("_dl_key", pack + F.col("_dl_ri"))
+                .join(
+                    F.broadcast(dvk) if dv_bcast else dvk,  # bcast-ok: guarded by catalog-counted positions (DV_BROADCAST_MAX_POSITIONS)
+                    "_dl_key", "left_anti",
+                )
+                .drop("_dl_fid", "_dl_key", "_dl_sz")
+            )
+        else:  # >8M DV'd files in one scan: packed fid overflows
+            dvp = dv.select(
+                Lake._uri_col(table_dir, fids, "file").alias("_dl_fp"),
+                F.col("row_index").alias("_dl_ri"),
+            )
+            masked = masked.join(
+                F.broadcast(dvp) if dv_bcast else dvp,  # bcast-ok: guarded by catalog-counted positions (DV_BROADCAST_MAX_POSITIONS)
+                ["_dl_fp", "_dl_ri"], "left_anti",
+            )
+        if not keep_meta:
+            masked = masked.drop("_dl_fp", "_dl_ri")
+        parts.append(masked)
+    return _union(parts)
+
+
+def inline_df(
+    spark: SparkSession,
+    state: TableState,
+    schema: T.StructType,
+    row_id: str | None = None,
+) -> DataFrame | None:
+    """Inline-buffer rows under ``schema``, each mapped through its own
+    vintage (renames, columns added after it, initial-default fills) —
+    the single authority every inline consumer (scan, predicate match,
+    DML rewrite, frozen read) goes through. ``row_id`` names a column
+    to carry each row's id. Built by ``_local_df``: an Arrow-backed
+    ``LocalRelation``, so a read over it starts no Python worker."""
+    if not state.inline_rows:
+        return None
+    out = T.StructType(
+        list(schema.fields)
+        + ([T.StructField(row_id, T.LongType(), False)] if row_id else [])
+    )
+    groups = _by_vintage(
+        state, schema, state.inline_rows, lambda r: r.get("begin_snapshot", 0)
+    )
+    return _union([
+        _fill(
+            _local_df(
+                spark,
+                [
+                    inline_values(r["values"], schema, phys)
+                    + ((r["row_id"],) if row_id else ())
+                    for r in rows
+                ],
+                out,
+            ),
+            schema, fills,
+        )
+        for (phys, fills), rows in groups.items()
+    ])
+
+
+def _attach_rowid(
+    spark: SparkSession, table_dir: str, state: TableState, df: DataFrame
+) -> DataFrame:
+    """Append the ``rowid`` lineage column to a ``keep_meta`` scan:
+    rowid = file.row_id_start + row_index (upstream DuckLake
+    semantics; the reference lists rowid unsupported,
+    docs/ducklake_feature_coverage.md:54). The (file → start) map is
+    metadata-sized (one row per live data file), so the broadcast
+    join costs what the planner's own file listing already costs."""
+    sdf = _local_df(
+        spark,
+        [
+            (Lake._file_uri(f"{table_dir}/{rel}"), fe.row_id_start)
+            for rel, fe in state.files.items()
+        ],
+        T.StructType([
+            T.StructField("_dl_fp", T.StringType()),
+            T.StructField("_dl_start", T.LongType()),
+        ]),
+    )
+    return (
+        df.join(F.broadcast(sdf), "_dl_fp", "left")  # bcast-ok: one row per data file (metadata-sized)
+        .withColumn("rowid", F.col("_dl_start") + F.col("_dl_ri"))
+        .drop("_dl_fp", "_dl_ri", "_dl_start")
+    )
+
+
+def table_rows(
+    spark: SparkSession,
+    table_dir: str,
+    state: TableState,
+    schema: T.StructType,
+    rels: list[str] | None = None,
+    with_rowid: bool = False,
+    **dv,
+) -> DataFrame:
+    """The rows of ``state`` under ``schema``: its data files (``rels``
+    only, when given) ∪ its inline rows. ``with_rowid`` appends the
+    ``rowid`` lineage column. ``dv`` goes to :func:`read_files`."""
+    if not with_rowid:
+        df = read_files(spark, table_dir, state, schema, rels, **dv)
+        inline = inline_df(spark, state, schema)
+    else:
+        if "rowid" in schema.names:
+            raise LakeError(
+                "with_rowid=True clashes with an existing 'rowid' column"
+            )
+        df = _attach_rowid(
+            spark, table_dir, state,
+            read_files(spark, table_dir, state, schema, rels, True, **dv),
+        )
+        inline = inline_df(spark, state, schema, row_id="rowid")
+    return df if inline is None else df.unionByName(inline)
+
+
 class Lake:
     """A lakehouse rooted at ``path`` (one directory per table)."""
 
@@ -546,7 +935,7 @@ class Lake:
         # 8 bytes per deleted position and at most
         # _DV_KEY_CACHE_PER_TABLE entries per table (lowest snapshot
         # evicted first, so alternating latest-version and time-travel
-        # scans don't thrash the steady-state entry; see _read_files).
+        # scans don't thrash the steady-state entry; see _dv_keys).
         self._dv_key_cache: dict[tuple[str, int], DataFrame] = {}
         # (canon name, snapshot_id, with_rowid) -> constructed table
         # DataFrame: the plan of a (table, snapshot) is immutable, so
@@ -1138,8 +1527,9 @@ class Lake:
         new_schema = T.StructType(new_fields)
         # Renames are metadata-only (≙ ducklake_name_mapping): the snap
         # carries a structured {old, new} entry that the catalog replay
-        # folds into TableState.renames, and _read_files maps each
-        # current column back to its per-file physical name at scan time.
+        # folds into TableState.renames, and every reader maps each
+        # current column back to its per-file physical name at scan
+        # time (TableState.vintage).
         snap = {
             "operation": f"ALTER TABLE {op}",
             "schema": new_schema.jsonValue(),
@@ -1538,56 +1928,6 @@ class Lake:
 
     # ----------------------------------------------------------- read path
 
-    def _inline_df(
-        self,
-        state: TableState,
-        schema: T.StructType,
-        with_row_id: bool = False,
-    ) -> DataFrame | None:
-        """Inline-buffer rows as a DataFrame under ``schema``, with the
-        rename mapping AND initial-default fills applied — the single
-        authority every inline consumer (scan, predicate match, DML
-        rewrite) must go through. ``with_row_id`` appends
-        ``_dl_row_id`` for consumers that need to address rows. The
-        buffer is built by ``_local_df``: an Arrow-backed
-        ``LocalRelation``, so a read over it starts no Python worker."""
-        if not state.inline_rows:
-            return None
-        data = []
-        for r in state.inline_rows:
-            bs = r.get("begin_snapshot", 0)
-            # Inline values are keyed by their insert-time column names;
-            # a later RENAME COLUMN must look them up under the physical
-            # (old) name, exactly like the parquet scan path.
-            data.append(
-                tuple(
-                    from_json_value(
-                        r["values"].get(state.physical_name(f.name, bs)),
-                        f.dataType,
-                    )
-                    for f in schema.fields
-                )
-                + (bs, r["row_id"])
-            )
-        aug = T.StructType(
-            list(schema.fields)
-            + [
-                T.StructField("_dl_bs", T.LongType(), False),
-                T.StructField("_dl_row_id", T.LongType(), False),
-            ]
-        )
-        df = _local_df(self.spark, data, aug)
-        for c, (add_snap, expr) in self._initial_defaults(state, schema).items():
-            df = df.withColumn(
-                c,
-                F.when(
-                    (F.col("_dl_bs") < F.lit(add_snap)) & F.col(c).isNull(),
-                    F.expr(expr).cast(schema[c].dataType),
-                ).otherwise(F.col(c)),
-            )
-        df = df.drop("_dl_bs")
-        return df if with_row_id else df.drop("_dl_row_id")
-
     _DV_SCHEMA = T.StructType(
         [
             T.StructField("file", T.StringType(), False),
@@ -1595,34 +1935,53 @@ class Lake:
         ]
     )
 
-    # Above this many catalog-recorded deleted positions in one scan,
-    # the DV anti-join drops its broadcast hint (64M * 8 B packed keys
-    # ≈ 512 MB — comfortably under Spark's 8 GB broadcast hard limit
-    # and typical driver memory, while still broadcasting every
-    # vacuum-bounded steady-state DV). Tests override it to force the
-    # sort-merge path at toy scale.
-    DV_BROADCAST_MAX_POSITIONS = 64_000_000
+    # Tests override it to force the sort-merge path at toy scale.
+    DV_BROADCAST_MAX_POSITIONS = DV_BROADCAST_MAX_POSITIONS
 
     # Per-table cap on cached DV key sets (latest + a few time-travel
     # vintages); lowest snapshot_id evicted first.
     _DV_KEY_CACHE_PER_TABLE = 4
 
-    @staticmethod
-    def _initial_defaults(
-        state: TableState, schema: T.StructType
-    ) -> dict[str, tuple[int, str]]:
-        """col -> (snapshot the column first appeared at, initial_default
-        SQL expr) for every schema field carrying an initial_default.
+    def _dv_args(self, name: str, state: TableState, rels) -> dict:
+        """``read_files`` DV arguments for a scan of ``name``: this
+        lake's broadcast guard, and for a full scan (``rels`` None) its
+        DV key cache."""
+        return {
+            "dv_broadcast_max": self.DV_BROADCAST_MAX_POSITIONS,
+            "dv_keys": None if rels is not None else (
+                lambda build: self._dv_keys(name, state, build)
+            ),
+        }
 
-        The add snapshot follows the LOGICAL column
-        (``TableState.added_at``), so a re-ADDed name is dated by its own
-        add, not a dropped predecessor's."""
-        out: dict[str, tuple[int, str]] = {}
-        for f in schema.fields:
-            d = (f.metadata or {}).get("initial_default")
-            if d is not None:
-                out[f.name] = (state.added_at(f.name), d)
-        return out
+    def _dv_keys(
+        self, name: str, state: TableState, build: Callable[[], DataFrame]
+    ) -> DataFrame:
+        """The packed DV key set of a full scan of ``state``. It is
+        immutable per (table, snapshot), so it is persisted and reused:
+        the per-query DV scan job disappears in the steady state (an
+        analytics session runs many reads between deletes). Up to
+        _DV_KEY_CACHE_PER_TABLE versions per table are kept (lowest
+        snapshot evicted first) so time-travel reads don't thrash the
+        steady-state latest entry. Same pending-txn hazard as the
+        table-df cache: a state that skipped an unresolved txn mutates
+        in place when the marker lands — snapshot_id is not a key."""
+        log = self._log(name)
+        if log.has_unresolved():
+            return build()
+        ckey = (self._canon(name), state.snapshot_id, log.epoch)
+        dvk = self._dv_key_cache.get(ckey)
+        if dvk is None:
+            dvk = build().persist(StorageLevel.MEMORY_AND_DISK)
+            sibs = [k for k in self._dv_key_cache if k[0] == ckey[0] and k != ckey]
+            while len(sibs) >= self._DV_KEY_CACHE_PER_TABLE:
+                victim = min(sibs, key=lambda k: k[1])
+                sibs.remove(victim)
+                try:
+                    self._dv_key_cache.pop(victim).unpersist()
+                except Exception:
+                    pass
+            self._dv_key_cache[ckey] = dvk
+        return dvk
 
     def _read_files(
         self,
@@ -1632,319 +1991,11 @@ class Lake:
         rels: list[str] | None = None,
         keep_meta: bool = False,
     ) -> DataFrame:
-        """Read data files under ``schema``, subtracting positional
-        delete files (≙ ducklake_delete_file) via a broadcast anti-join
-        on a packed (file id, _metadata.row_index) LONG — file ids
-        resolved per row by a numeric ``_metadata.file_size`` join when
-        the catalog sizes are unique, else by the file_path string (see
-        the size_ok comment below). Files without a DV bypass the join
-        entirely. DVs are small relative to data (positions, not rows),
-        so the broadcast is the scale-correct plan; the packed key set
-        is persisted per (table, snapshot, epoch) for full scans."""
-        table_dir = self._table_dir(name)
-        full_scan = rels is None
-        rels = sorted(state.files) if rels is None else sorted(rels)
-        if not rels:
-            df = _local_df(self.spark, [], schema)
-            if keep_meta:
-                df = df.withColumn("_dl_fp", F.lit(None).cast("string")).withColumn(
-                    "_dl_ri", F.lit(None).cast("long")
-                )
-            return df
-        applicable = {f: d for f, d in state.dvs.items() if f in set(rels)}
-        fills = self._initial_defaults(state, schema)
-        # Files that predate a defaulted column must read its
-        # initial_default, not NULL — group files by which defaulted
-        # columns they're missing (group count ≤ #ADD COLUMN DEFAULTs + 1,
-        # independent of file count) and fill per group.
-        current_names = tuple(f.name for f in schema.fields)
-        add_snaps = {c: state.added_at(c) for c in current_names}
-        groups: dict[tuple, list[str]] = {}
-        for rel in rels:
-            bs = state.files[rel].begin_snapshot
-            missing = tuple(
-                c for c, (add_snap, _e) in fills.items() if bs < add_snap
-            )
-            # Files written before a RENAME COLUMN physically store the
-            # old name (rename is metadata-only, ≙ ducklake_name_mapping)
-            # — map each current column to the name it carries in this
-            # file's vintage. A column whose logical ADD postdates the
-            # file maps to None: it must read NULL/default even when an
-            # older file contains a DROPped column of the same name
-            # (name-reuse must not leak stale bytes). Group count stays
-            # bounded by #ALTERs, not #files.
-            phys = tuple(
-                (state.physical_name(c, bs) if add_snaps[c] <= bs else None)
-                for c in current_names
-            )
-            groups.setdefault((missing, phys), []).append(rel)
-
-        def _build(
-            paths: list[str], missing, phys, with_meta: bool,
-            with_size: bool = False,
-        ):
-            meta_cols = []
-            if with_meta:
-                meta_cols += [
-                    F.col("_metadata.file_path").alias("_dl_fp"),
-                    F.col("_metadata.row_index").alias("_dl_ri"),
-                ]
-            if with_size:
-                if not with_meta:
-                    meta_cols.append(
-                        F.col("_metadata.row_index").alias("_dl_ri")
-                    )
-                meta_cols.append(
-                    F.col("_metadata.file_size").alias("_dl_sz")
-                )
-            if phys == current_names:
-                g = self.spark.read.schema(schema).parquet(*paths)
-                if meta_cols:
-                    g = g.select("*", *meta_cols)
-            else:
-                # Read under the physical names, then alias back to the
-                # current names. A physical name claimed by a rename-walk
-                # belongs to the OLDER column; a clashing same-named
-                # column must have been re-added after that rename, so it
-                # cannot exist in these files — read it as NULL (or its
-                # initial_default fill below).
-                claimed = {
-                    p
-                    for c, p in zip(current_names, phys)
-                    if p is not None and p != c
-                }
-                read_fields, aliases = [], []
-                for f, p in zip(schema.fields, phys):
-                    if p is None or (p == f.name and p in claimed):
-                        aliases.append((None, f))
-                        continue
-                    read_fields.append(T.StructField(p, f.dataType, True))
-                    aliases.append((p, f))
-                g = self.spark.read.schema(T.StructType(read_fields)).parquet(
-                    *paths
-                )
-                proj = [
-                    (
-                        F.col(p).alias(f.name)
-                        if p is not None
-                        else F.lit(None).cast(f.dataType).alias(f.name)
-                    )
-                    for p, f in aliases
-                ]
-                proj += meta_cols
-                g = g.select(*proj)
-            for c in missing:
-                g = g.withColumn(
-                    c, F.expr(fills[c][1]).cast(schema[c].dataType)
-                )
-            return g
-
-        # r11: the DV subtraction applies ONLY to files that have a DV
-        # — clean files (the steady state after vacuum, and everything
-        # a delete never touched) union straight through with zero
-        # join machinery, so DV read overhead is proportional to the
-        # DV'd file set, not the table. Previously every scan of a
-        # table with ANY delete paid per-row _metadata.file_path
-        # string materialization + a (string, long)-keyed anti-join
-        # over all rows.
-        dv_set = set(applicable)
-        # r11b: resolve file ids on the probe side by joining on
-        # _metadata.file_size (one LONG per row) instead of the
-        # file_path string whenever the catalog-recorded sizes of this
-        # scan's DV'd files are unique. A string join key forces an
-        # UnsafeRow copy of the ~100-byte path per probe row — measured
-        # ~0.7 s of pure overhead on a 10M-row masked scan where the
-        # numeric form runs at the raw-scan floor (0.9 s → 0.23 s for
-        # the resolve join; 1.25 s → 0.52 s full masked scan).
-        # Uniqueness is checked driver-side against FileEntry.bytes
-        # (recorded via os.path.getsize at commit, which is what
-        # _metadata.file_size reports); any collision or missing size
-        # falls back to the string-keyed form.
-        fids = sorted(applicable)
-        sizes = {
-            r: state.files[r].bytes
-            for r in fids
-            if r in state.files and state.files[r].bytes
-        }
-        size_ok = (
-            len(sizes) == len(fids)
-            and len(set(sizes.values())) == len(fids)
-            # the packed-key form needs _dl_fp when fid overflows the
-            # pack (>8M DV'd files) — keep the string columns then
-            and len(fids) < (1 << 23)
+        """:func:`read_files` over table ``name``."""
+        return read_files(
+            self.spark, self._table_dir(name), state, schema, rels, keep_meta,
+            **self._dv_args(name, state, rels),
         )
-        # The size-keyed join resolves file ids through
-        # _metadata.file_size == FileEntry.bytes. That invariant holds
-        # because bytes is recorded via os.path.getsize at commit — but
-        # if any future registration path ever records bytes from
-        # another source, the left join would yield a null _dl_fid and
-        # the anti-join would silently KEEP deleted rows. Guard it here
-        # with one stat per DV'd file (metadata-scale) and fall back to
-        # the path-string join on any mismatch: wrong-but-slower is
-        # acceptable, wrong-results-silently is not.
-        if size_ok:
-            try:
-                size_ok = all(
-                    os.path.getsize(os.path.join(table_dir, r)) == sizes[r]
-                    for r in fids
-                )
-            except OSError:
-                size_ok = False
-        # Broadcast guard for the DV anti-join (the one read-path
-        # construct with a hard cliff at scale): the packed key set is
-        # 8 B per deleted position, and Spark's broadcast hard limit is
-        # 8 GB — a mass DELETE between vacuums (e.g. 20% of a 10B-row
-        # table = 2B positions = 16 GB packed) would OOM the driver.
-        # The catalog records the cumulative DV position count per file
-        # at commit, so the scan knows the total at plan time for free;
-        # above the threshold (~512 MB packed) the hint is dropped and
-        # the packed-LONG anti-join runs sort-merge/shuffled-hash under
-        # AQE. The reference has no such cliff because DuckDB applies
-        # delete files per-file (src/pgducklake_freeze.cpp:43).
-        total_dv_positions = sum(
-            int(d.get("deleted", 0)) for d in applicable.values()
-        )
-        dv_bcast = total_dv_positions <= self.DV_BROADCAST_MAX_POSITIONS
-        parts, parts_dvd = [], []
-        for (missing, phys), group_rels in sorted(
-            groups.items(), key=lambda kv: repr(kv[0])
-        ):
-            clean = [r for r in group_rels if r not in dv_set]
-            dvd = [r for r in group_rels if r in dv_set]
-            if clean:
-                parts.append(_build(
-                    [os.path.join(table_dir, p) for p in clean],
-                    missing, phys, keep_meta,
-                ))
-            if dvd:
-                parts_dvd.append(_build(
-                    [os.path.join(table_dir, p) for p in dvd],
-                    missing, phys,
-                    with_meta=keep_meta or not size_ok,
-                    with_size=size_ok,
-                ))
-        if parts_dvd:
-            masked = parts_dvd[0]
-            for p in parts_dvd[1:]:
-                masked = masked.unionByName(p)
-            dv_paths = sorted(
-                {os.path.join(table_dir, d["path"]) for d in applicable.values()}
-            )
-            dv = (
-                self.spark.read.schema(self._DV_SCHEMA)
-                .parquet(*dv_paths)
-                .filter(F.col("file").isin(list(applicable)))
-            )
-            # Anti-join on a packed single LONG (fid * 2^40 + row_index
-            # — a bijection, not a hash: row_index within one parquet
-            # file is < 2^40 always, and fid is a dense index over this
-            # scan's DV'd files) instead of the (path-string, long)
-            # pair: the string-keyed form broadcast a ~100-byte path
-            # per deleted position and hashed a path string per probe
-            # row. The file→fid maps are `_local_df` LocalRelations,
-            # never createDataFrame(list), whose Python-RDD scan pays a
-            # Python-worker round trip on every execution. Together
-            # with the clean-file split: 2.3 s →
-            # ~0.7 s for count+sum over 10M rows with 5% deleted;
-            # the size-keyed resolve (r11b, see size_ok above) takes
-            # the same scan to ~0.5 s.
-            if len(fids) < (1 << 23):
-                pack = F.shiftleft(F.col("_dl_fid"), 40)
-                # The packed key set of a (table, snapshot) is
-                # immutable — persist it for full-table scans so the
-                # per-query DV scan job disappears in the steady state
-                # (an analytics session runs many reads between
-                # deletes). fids is sorted(applicable), deterministic
-                # for a given state, so the cached keys stay consistent
-                # with this call's probe-side fid map. Up to
-                # _DV_KEY_CACHE_PER_TABLE versions per table are kept
-                # (lowest snapshot evicted first) so time-travel reads
-                # don't thrash the steady-state latest entry.
-                # Same pending-txn hazard as the table-df cache: a
-                # state that skipped an unresolved txn mutates in place
-                # when the marker lands — snapshot_id is not a key.
-                _log = self._log(name)
-                cacheable = full_scan and not _log.has_unresolved()
-                ckey = (self._canon(name), state.snapshot_id, _log.epoch)
-                dvk = self._dv_key_cache.get(ckey) if cacheable else None
-                fid = T.StructField("_dl_fid", T.LongType(), False)
-                if dvk is None:
-                    relmap = _local_df(
-                        self.spark, [(rel, i) for i, rel in enumerate(fids)],
-                        T.StructType([T.StructField("file", T.StringType()), fid]),
-                    )
-                    dvk = (
-                        dv.join(F.broadcast(relmap), "file")  # bcast-ok: one row per data file (metadata-sized)
-                        .select((pack + F.col("row_index")).alias("_dl_key"))
-                    )
-                    if cacheable:
-                        dvk = dvk.persist(StorageLevel.MEMORY_AND_DISK)
-                        sibs = [
-                            k for k in self._dv_key_cache
-                            if k[0] == ckey[0] and k != ckey
-                        ]
-                        while len(sibs) >= self._DV_KEY_CACHE_PER_TABLE:
-                            victim = min(sibs, key=lambda k: k[1])
-                            sibs.remove(victim)
-                            try:
-                                self._dv_key_cache.pop(victim).unpersist()
-                            except Exception:
-                                pass
-                        self._dv_key_cache[ckey] = dvk
-                if size_ok:
-                    szmap = _local_df(
-                        self.spark,
-                        [(sizes[rel], i) for i, rel in enumerate(fids)],
-                        T.StructType([T.StructField("_dl_sz", T.LongType()), fid]),
-                    )
-                    masked = (
-                        masked.join(F.broadcast(szmap), "_dl_sz", "left")  # bcast-ok: one row per data file (metadata-sized)
-                        .withColumn("_dl_key", pack + F.col("_dl_ri"))
-                        .join(
-                            F.broadcast(dvk) if dv_bcast else dvk,  # bcast-ok: guarded by catalog-counted positions (DV_BROADCAST_MAX_POSITIONS)
-                            "_dl_key", "left_anti",
-                        )
-                        .drop("_dl_fid", "_dl_key", "_dl_sz")
-                    )
-                else:
-                    fmap = _local_df(
-                        self.spark,
-                        [
-                            (self._file_uri(f"{table_dir}/{rel}"), i)
-                            for i, rel in enumerate(fids)
-                        ],
-                        T.StructType([T.StructField("_dl_fp", T.StringType()), fid]),
-                    )
-                    masked = (
-                        masked.join(F.broadcast(fmap), "_dl_fp", "left")  # bcast-ok: one row per data file (metadata-sized)
-                        .withColumn("_dl_key", pack + F.col("_dl_ri"))
-                        .join(
-                            F.broadcast(dvk) if dv_bcast else dvk,  # bcast-ok: guarded by catalog-counted positions (DV_BROADCAST_MAX_POSITIONS)
-                            "_dl_key", "left_anti",
-                        )
-                        .drop("_dl_fid", "_dl_key")
-                    )
-            else:  # >8M DV'd files in one scan: packed fid overflows
-                dvp = dv.select(
-                    self._uri_col(table_dir, fids, "file").alias("_dl_fp"),
-                    F.col("row_index").alias("_dl_ri"),
-                )
-                masked = masked.join(
-                    F.broadcast(dvp) if dv_bcast else dvp,  # bcast-ok: guarded by catalog-counted positions (DV_BROADCAST_MAX_POSITIONS)
-                    ["_dl_fp", "_dl_ri"], "left_anti",
-                )
-            if not keep_meta:
-                masked = masked.drop("_dl_fp", "_dl_ri")
-            parts.append(masked)
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df
-
-    def _files_df(
-        self, name: str, state: TableState, schema: T.StructType
-    ) -> DataFrame:
-        return self._read_files(name, state, schema)
 
     def _resolve_version(
         self,
@@ -1960,33 +2011,6 @@ class Lake:
         if ts is not None:
             return self._log(name).version_at_timestamp(ts)
         return None
-
-    def _attach_rowid(
-        self, name: str, state: TableState, df: DataFrame
-    ) -> DataFrame:
-        """Append the ``rowid`` lineage column to a ``keep_meta`` scan:
-        rowid = file.row_id_start + row_index (upstream DuckLake
-        semantics; the reference lists rowid unsupported,
-        docs/ducklake_feature_coverage.md:54). The (file → start) map is
-        metadata-sized (one row per live data file), so the broadcast
-        join costs what the planner's own file listing already costs."""
-        table_dir = self._table_dir(name)
-        starts = [
-            (self._file_uri(f"{table_dir}/{rel}"), fe.row_id_start)
-            for rel, fe in state.files.items()
-        ]
-        sdf = _local_df(
-            self.spark, starts,
-            T.StructType([
-                T.StructField("_dl_fp", T.StringType()),
-                T.StructField("_dl_start", T.LongType()),
-            ]),
-        )
-        return (
-            df.join(F.broadcast(sdf), "_dl_fp", "left")  # bcast-ok: one row per data file (metadata-sized)
-            .withColumn("rowid", F.col("_dl_start") + F.col("_dl_ri"))
-            .drop("_dl_fp", "_dl_ri", "_dl_start")
-        )
 
     def table(
         self,
@@ -2025,26 +2049,12 @@ class Lake:
         hit = self._table_df_cache.get(ckey) if ckey else None
         if hit is not None:
             return hit
-        if not with_rowid:
-            df = self._files_df(name, state, schema)
-            inline = self._inline_df(state, schema)
-            out = df.unionByName(inline) if inline is not None else df
-            self._table_df_put(ckey, out)
-            return out
-        if "rowid" in {f.name for f in schema.fields}:
-            raise LakeError(
-                "with_rowid=True clashes with an existing 'rowid' column"
-            )
-        df = self._attach_rowid(
-            name, state, self._read_files(name, state, schema, keep_meta=True)
+        out = table_rows(
+            self.spark, self._table_dir(name), state, schema,
+            with_rowid=with_rowid, **self._dv_args(name, state, None),
         )
-        inline = self._inline_df(state, schema, with_row_id=True)
-        if inline is not None:
-            df = df.unionByName(
-                inline.withColumnRenamed("_dl_row_id", "rowid")
-            )
-        self._table_df_put(ckey, df)
-        return df
+        self._table_df_put(ckey, out)
+        return out
 
     def _table_df_put(self, key: tuple | None, df: DataFrame) -> None:
         if key is None:  # unresolved pending txn: state not cacheable
@@ -2068,34 +2078,16 @@ class Lake:
         SURVEY.md §4.2) before Spark's own parquet pushdown.
         ``with_rowid=True`` appends the ``rowid`` lineage column (see
         ``table``)."""
-        v = self._resolve_version(name, tt.get("version"), tt.get("timestamp"))
-        state = self._state(name, v)
-        schema = state.schema_at(state.snapshot_id)
         if where is None:
             return self.table(name, with_rowid=with_rowid, **tt)
-        keep = prune_files(state, where)
-        if with_rowid:
-            if "rowid" in {f.name for f in schema.fields}:
-                raise LakeError(
-                    "with_rowid=True clashes with an existing 'rowid' column"
-                )
-            df = self._attach_rowid(
-                name, state,
-                self._read_files(
-                    name, state, schema, rels=sorted(keep), keep_meta=True
-                ),
-            )
-            inline = self._inline_df(state, schema, with_row_id=True)
-            if inline is not None:
-                df = df.unionByName(
-                    inline.withColumnRenamed("_dl_row_id", "rowid")
-                )
-        else:
-            df = self._read_files(name, state, schema, rels=sorted(keep))
-            inline = self._inline_df(state, schema)
-            if inline is not None:
-                df = df.unionByName(inline)
-        return df.filter(F.expr(where))
+        v = self._resolve_version(name, tt.get("version"), tt.get("timestamp"))
+        state = self._state(name, v)
+        rels = prune_files(state, where)
+        return table_rows(
+            self.spark, self._table_dir(name), state,
+            state.schema_at(state.snapshot_id), rels, with_rowid,
+            **self._dv_args(name, state, rels),
+        ).filter(F.expr(where))
 
     def sql(self, query: str) -> DataFrame:
         """Spark SQL over all lake tables (registered as temp views),
@@ -2308,9 +2300,9 @@ class Lake:
     ) -> list[int]:
         """Row ids of inline-buffer rows matching the predicate (the
         buffer is tiny by contract, so the id column rides along).
-        Goes through _inline_df so the predicate sees renamed columns
+        Goes through inline_df so the predicate sees renamed columns
         and initial-default fills exactly like a scan does."""
-        df = self._inline_df(state, schema, with_row_id=True)
+        df = inline_df(self.spark, state, schema, row_id="_dl_row_id")
         if df is None:
             return []
         return [r["_dl_row_id"] for r in df.filter(pred).select("_dl_row_id").collect()]
@@ -2453,10 +2445,10 @@ class Lake:
                 )
         # Change rows are read back under the DELETE snapshot's schema
         # vintage: record them as a scan would see them (renames
-        # resolved, initial defaults filled) via _inline_df.
+        # resolved, initial defaults filled) via inline_df.
         inline_changes = []
         if inline_ids:
-            buf = self._inline_df(state, schema, with_row_id=True)
+            buf = inline_df(self.spark, state, schema, row_id="_dl_row_id")
             keep = set(inline_ids)
             inline_changes = [
                 {
@@ -2562,11 +2554,11 @@ class Lake:
             # The preimage view must match what a scan would return —
             # renamed columns resolved AND initial defaults filled — so
             # both the SET evaluation and the recorded preimage go
-            # through _inline_df (the single inline-read authority).
+            # through inline_df (the single inline-read authority).
             buf_rows = [
                 r
-                for r in self._inline_df(
-                    state, schema, with_row_id=True
+                for r in inline_df(
+                    self.spark, state, schema, row_id="_dl_row_id"
                 ).collect()
                 if r["_dl_row_id"] in keep_ids
             ]
@@ -3173,7 +3165,7 @@ class Lake:
             if not state.inline_rows:
                 continue
             schema = state.schema
-            df = self._inline_df(state, schema)
+            df = inline_df(self.spark, state, schema)
             entries = self._write_data(
                 self._table_dir(tbl), df, state.partition_spec,
                 options=self.options(tbl), sort_spec=state.sort_spec,

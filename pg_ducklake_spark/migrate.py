@@ -16,12 +16,13 @@ the divergence in PARITY.md. Two source flavors:
 
 * a **frozen .ducklake metadata database** (the output of
   ``Lake.freeze``): the live data files are already parquet on disk, so
-  a clean table (no deletion vectors, no inlined rows, no column
-  renames) migrates as a pure metadata registration — ``create_table``
+  a clean table (no deletion vectors, no inlined rows, every file
+  holding exactly the current columns under their current names)
+  migrates as a pure metadata registration — ``create_table``
   from the frozen column defs + ``add_data_files`` on the referenced
-  files, zero data movement beyond hard links. Tables with DVs /
-  inline rows / renames materialize through ``FrozenLake.table`` (the
-  reader that already applies them) and insert.
+  files, zero data movement beyond hard links. Other tables
+  materialize through ``FrozenLake.table`` (the reader that applies
+  DVs, renames and the vintage rule) and insert.
 
 Scale note: per table the work is one DuckDB export (plain source) or
 no data pass at all (frozen source); the lake-side commit cost is the
@@ -235,28 +236,34 @@ def _from_ducklake(
     report: dict = {"tables": {}, "views": [], "skipped": {}}
     frozen = FrozenLake(lake.spark, db_path)
     for name in frozen.list_tables():  # create-all first (see _from_plain)
-        meta = frozen._tables[name]
+        schema = frozen._table(name)["state"].schema
         sch, _, _bare = name.rpartition(".")
         if sch:
             lake.create_schema(sch, if_not_exists=True)
         lake.create_table(
-            name, _ddl([(c, ty, nl) for c, ty, nl, *_ in meta["cols"]])
+            name,
+            _ddl([(f.name, f.dataType.simpleString(), f.nullable) for f in schema]),
         )
     for name in frozen.list_tables():
-        meta = frozen._tables[name]
+        t = frozen._table(name)
+        state = t["state"]
+        # Files that hold exactly the current columns, under their
+        # current names, register as they are.
         clean = (
-            not meta["dvs"]
-            and not meta["dv_rows"]
-            and not meta["inline"]
-            and not meta["renames"]
+            not state.dvs
+            and not state.inline_rows
+            and all(
+                state.vintage(state.schema, fe.begin_snapshot)
+                == (tuple(state.schema.names), ())
+                for fe in state.files.values()
+            )
         )
         if clean:
-            paths = [
-                os.path.join(frozen.data_root, p) for p, _bs in meta["files"]
-            ]
-            if not paths:
+            if not state.files:
                 report["tables"][name] = {"rows": 0, "mode": "register"}
                 continue
+            table_dir = os.path.join(frozen.data_root, t["relpath"])
+            paths = [os.path.join(table_dir, rel) for rel in state.files]
             report["tables"][name] = _land(lake, name, paths, msg)
         else:
             n = lake.insert(name, frozen.table(name), message=msg)

@@ -24,6 +24,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame, functions as F
 
 from pg_ducklake_spark.errors import LakeError
+from pg_ducklake_spark.lake import inline_df
 
 if TYPE_CHECKING:
     from pg_ducklake_spark.lake import Lake
@@ -101,8 +102,8 @@ def bucketed_join(
     rbuckets, rresidual = _files_by_bucket(lake, right, col)
 
     # Inline-buffer rows are unbucketed by definition.
-    linline = lake._inline_df(lstate, lschema)
-    rinline = lake._inline_df(rstate, rschema)
+    linline = inline_df(lake.spark, lstate, lschema)
+    rinline = inline_df(lake.spark, rstate, rschema)
 
     pieces: list[DataFrame] = []
     for b in sorted(set(lbuckets) & set(rbuckets)):

@@ -39,6 +39,7 @@ from pyspark.sql import types as T
 
 from pg_ducklake_spark.catalog import CDF_DIR
 from pg_ducklake_spark.errors import LakeError
+from pg_ducklake_spark.lake import inline_df
 from pg_ducklake_spark.operators.pruning import prune_files
 
 if TYPE_CHECKING:
@@ -122,7 +123,7 @@ def merge(
         probe = lake._read_files(
             target, state, schema, rels=prune_files(state, where), keep_meta=True
         ).select("_dl_fp", *on)
-        inline = lake._inline_df(state, schema)
+        inline = inline_df(lake.spark, state, schema)
         if inline is not None:
             probe = probe.unionByName(
                 inline.select(F.lit(_INLINE).alias("_dl_fp"), *on)

@@ -200,15 +200,20 @@ def _file_may_match(entry, col: str, op: str, lit: Any) -> bool:
 def prune_files(state: "TableState", where: str) -> list[str]:
     """Relative paths of files that may contain predicate matches."""
     conjuncts = _conjuncts(where, state.schema)
-    added = {c: state.added_at(c) for c, _o, _l in conjuncts}
+    if not conjuncts:
+        return list(state.files)
+    vintages: dict[int, dict] = {}
     keep = []
     for path, entry in state.files.items():
         bs = entry.begin_snapshot
-        # Stats are recorded under insert-time column names; a renamed
-        # column's stats live under its physical name in older files.
+        if bs not in vintages:
+            phys, _fills = state.vintage(state.schema, bs)
+            vintages[bs] = dict(zip(state.schema.names, phys))
+        # A file's stats are keyed by the names it stores; a column the
+        # file cannot hold (physical name None) prunes nothing.
         if all(
-            added[c] > bs
-            or _file_may_match(entry, state.physical_name(c, bs), o, l)
+            vintages[bs][c] is None
+            or _file_may_match(entry, vintages[bs][c], o, l)
             for c, o, l in conjuncts
         ):
             keep.append(path)

@@ -37,26 +37,28 @@ _DML_OPS = {"DELETE", "UPDATE", "MERGE"}
 
 @dataclass
 class _CdfPartition(InputPartition):
-    """One unit of executor-side work for a micro-batch."""
+    """One unit of executor-side work for a micro-batch. The vintage
+    mapping is resolved driver-side, so the executor needs no catalog:
+    ``phys_names`` aligns with ``field_names`` (None = the column is
+    absent from the data's vintage), and ``fill_values`` holds the
+    evaluated initial defaults of the absent columns that have one."""
 
     kind: str  # "insert_file" | "cdf_file" | "inline" | "dv_delete"
     path: str | None
     version: int
     timestamp: str | None
     field_names: list[str] = field(default_factory=list)
-    rows: list[tuple] = field(default_factory=list)  # inline only
+    phys_names: list = field(default_factory=list)
+    fill_values: dict = field(default_factory=dict)
+    # inline only: (values keyed by physical name, change type)
+    rows: list[tuple] = field(default_factory=list)
     # dv_delete only (r11 — DV-mode DELETE writes positions, not change
     # rows; the executor reconstructs deleted rows from the delta
-    # positions): per-file physical column names aligned with
-    # field_names (None = column absent from this file's vintage),
-    # the cumulative DV file, the prior DV file if any, the data
-    # file's rel key inside the DV parquet, and evaluated
-    # initial-default constants for absent columns.
-    phys_names: list = field(default_factory=list)
+    # positions): the cumulative DV file, the prior DV file if any, and
+    # the data file's rel key inside the DV parquet.
     dv_path: str | None = None
     prior_dv_path: str | None = None
     data_rel: str | None = None
-    fill_values: dict = field(default_factory=dict)
 
 
 def _changes_meta_fields() -> list[T.StructField]:
@@ -93,6 +95,7 @@ class LakeCDFStreamReader(DataSourceStreamReader):
         self.data_fields: list[T.StructField] = [
             f for f in schema.fields if f.name not in meta
         ]
+        self._constants: dict[tuple[str, str], object] = {}  # evaluated defaults
 
     def _log(self):
         from pg_ducklake_spark.catalog import SnapshotLog
@@ -135,53 +138,42 @@ class LakeCDFStreamReader(DataSourceStreamReader):
                 "dropped after the stream started; restart the stream to "
                 "pick up the new schema"
             )
+        # The catalog's fields: initial_default lives in their metadata,
+        # which the stream schema lost to DDL serialization.
+        schema = T.StructType([end_state.schema[c] for c in names])
         for v in range(start["version"] + 1, end["version"] + 1):
             snap = log.read_snapshot(v)
             op = snap.get("operation", "WRITE")
             if op in _SKIP_OPS:
                 continue
             ts = snap.get("timestamp")
-            # Data committed at v carries THAT vintage's column names —
-            # map each fixed-schema column back through later renames
-            # (identical walk to changefeed.read_mapped); a column the
-            # vintage lacks reads as NULL, matching the batch feed.
-            raw = [end_state.physical_name(c, v) for c in names]
-            claimed = {p for c, p in zip(names, raw) if p != c}
-            phys = [
-                None if (p == c and p in claimed) else p
-                for c, p in zip(names, raw)
-            ]
+            # Data committed at v is of vintage v.
+            phys, fills = self._vintage(end_state, schema, v)
+            common = dict(
+                version=v, timestamp=ts, field_names=names,
+                phys_names=phys, fill_values=fills,
+            )
             if op not in _DML_OPS:
                 for d in snap.get("add", []):
-                    parts.append(
-                        _CdfPartition(
-                            kind="insert_file",
-                            path=os.path.join(self.table_dir, d["path"]),
-                            version=v, timestamp=ts, field_names=names,
-                            phys_names=phys,
-                        )
-                    )
+                    parts.append(_CdfPartition(
+                        kind="insert_file",
+                        path=os.path.join(self.table_dir, d["path"]), **common,
+                    ))
             if snap.get("cdf_path"):
-                parts.append(
-                    _CdfPartition(
-                        kind="cdf_file",
-                        path=os.path.join(self.table_dir, snap["cdf_path"]),
-                        version=v, timestamp=ts, field_names=names,
-                        phys_names=phys,
-                    )
-                )
+                parts.append(_CdfPartition(
+                    kind="cdf_file",
+                    path=os.path.join(self.table_dir, snap["cdf_path"]),
+                    **common,
+                ))
             if op == "DELETE" and snap.get("dv") and not snap.get("cdf_path"):
                 # r11: DV-mode DELETE carries positions only (the
                 # delete file IS the change record, the reference's
                 # ducklake_delete_file design) — one partition per
-                # touched data file; the executor set-differences the
-                # delta positions and take()s them from the data file.
-                # Vintage mapping (renames, later-added columns,
-                # initial-default fills) is resolved HERE, driver-side,
-                # with the same schema-log walk Lake._read_files uses,
-                # so the executor needs no catalog access.
+                # touched data file, at that file's own vintage; the
+                # executor set-differences the delta positions and
+                # take()s them from the data file.
                 parts.extend(
-                    self._dv_delete_partitions(log, end_state, snap, v, ts)
+                    self._dv_delete_partitions(log, end_state, schema, snap, v, ts)
                 )
             inline = [
                 ("insert", r["values"])
@@ -192,87 +184,65 @@ class LakeCDFStreamReader(DataSourceStreamReader):
                 for c in snap.get("inline_changes", [])
             ]
             if inline:
-                from pg_ducklake_spark.catalog import from_json_value
+                from pg_ducklake_spark.lake import inline_values
 
                 rows = [
-                    tuple(
-                        from_json_value(
-                            vals.get(end_state.physical_name(f.name, v)),
-                            f.dataType,
-                        )
-                        for f in self.data_fields
+                    (
+                        {
+                            p: x
+                            for p, x in zip(phys, inline_values(vals, schema, phys))
+                            if p is not None
+                        },
+                        ctype,
                     )
-                    + (ctype,)
                     for ctype, vals in inline
                 ]
                 parts.append(
-                    _CdfPartition(
-                        kind="inline", path=None, version=v, timestamp=ts,
-                        field_names=names, rows=rows,
-                    )
+                    _CdfPartition(kind="inline", path=None, rows=rows, **common)
                 )
         return parts
 
-    def _dv_delete_partitions(self, log, end_state, snap, v, ts):
-        """Per-file partitions for a DV-mode DELETE snapshot."""
+    def _vintage(self, state, schema: T.StructType, bs: int):
+        """``state.vintage`` with its fills evaluated to constants."""
+        phys, fills = state.vintage(schema, bs)
+        return list(phys), {
+            c: self._constant(expr, schema[c].dataType) for c, expr in fills
+        }
+
+    def _constant(self, expr: str, dtype: T.DataType):
         from pyspark.sql import SparkSession
 
-        state = end_state
-        prior = log.replay(v - 1)
-        schema_v = T.StructType(self.data_fields)
-        names = [f.name for f in schema_v.fields]
+        key = (expr, dtype.simpleString())
+        if key not in self._constants:
+            # getActiveSession is thread-local and the micro-batch
+            # planner runs on the streaming thread — getOrCreate returns
+            # the existing session from any thread.
+            spark = (
+                SparkSession.getActiveSession()
+                or SparkSession.builder.getOrCreate()
+            )
+            self._constants[key] = spark.sql(
+                f"SELECT CAST(({expr}) AS {key[1]})"
+            ).first()[0]
+        return self._constants[key]
 
-        add_snaps = {f.name: state.added_at(f.name) for f in schema_v.fields}
-        # getActiveSession is thread-local and the micro-batch planner
-        # runs on the streaming thread — getOrCreate returns the
-        # existing session from any thread.
-        spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
-        # initial_default lives in the CATALOG schema's field metadata —
-        # the fixed stream schema Spark hands back to streamReader()
-        # has been through DDL serialization, which strips metadata.
-        end_meta = {
-            f.name: (f.metadata or {}) for f in end_state.schema.fields
-        }
-        fills = {}
-        for f in schema_v.fields:
-            d = end_meta.get(f.name, {}).get("initial_default")
-            if d is not None and spark is not None:
-                fills[f.name] = spark.sql(
-                    f"SELECT CAST(({d}) AS {f.dataType.simpleString()})"
-                ).first()[0]
+    def _dv_delete_partitions(self, log, end_state, schema, snap, v, ts):
+        """Per-file partitions for a DV-mode DELETE snapshot."""
+        prior = log.replay(v - 1)
         parts = []
         for d in snap["dv"]:
             rel = d["file"]
             fe = prior.files.get(rel)
             if fe is None:
                 continue
-            bs = fe.begin_snapshot
-            phys: list[str | None] = []
-            for f in schema_v.fields:
-                phys.append(
-                    state.physical_name(f.name, bs)
-                    if add_snaps[f.name] <= bs
-                    else None
-                )
-            # Name-reuse guard (same rule as Lake._read_files): a
-            # physical name claimed by a DIFFERENT column's rename walk
-            # cannot belong to this one in these files.
-            claimed = {
-                p for f2, p in zip(schema_v.fields, phys)
-                if p is not None and p != f2.name
-            }
-            phys = [
-                None if (p is not None and p == f2.name and p in claimed)
-                else p
-                for f2, p in zip(schema_v.fields, phys)
-            ]
+            phys, fills = self._vintage(end_state, schema, fe.begin_snapshot)
             prior_dv = prior.dvs.get(rel)
             parts.append(
                 _CdfPartition(
                     kind="dv_delete",
                     path=os.path.join(self.table_dir, rel),
-                    version=v, timestamp=ts, field_names=names,
-                    phys_names=phys,
+                    version=v, timestamp=ts, field_names=schema.names,
+                    phys_names=phys, fill_values=fills,
                     dv_path=os.path.join(self.table_dir, d["path"]),
                     prior_dv_path=(
                         os.path.join(self.table_dir, prior_dv["path"])
@@ -280,10 +250,6 @@ class LakeCDFStreamReader(DataSourceStreamReader):
                         else None
                     ),
                     data_rel=rel,
-                    fill_values={
-                        k: val for k, val in fills.items()
-                        if add_snaps[k] > bs
-                    },
                 )
             )
         return parts
@@ -297,59 +263,46 @@ class LakeCDFStreamReader(DataSourceStreamReader):
             else None
         )
         tail = (partition.version, commit_ts)
+
+        def row(rec: dict, change_type: str) -> tuple:
+            return tuple(
+                rec.get(p) if p is not None else partition.fill_values.get(nm)
+                for nm, p in zip(partition.field_names, partition.phys_names)
+            ) + (change_type,) + tail
+
         if partition.kind == "inline":
-            for row in partition.rows:
-                yield row[:-1] + (row[-1],) + tail
+            for rec, change_type in partition.rows:
+                yield row(rec, change_type)
             return
         import pyarrow.dataset as ds
 
+        dataset = ds.dataset(partition.path, format="parquet")
+        want = [
+            p for p in partition.phys_names
+            if p is not None and p in dataset.schema.names
+        ]
         if partition.kind == "dv_delete":
             import pyarrow.compute as pc
 
-            newdv = ds.dataset(partition.dv_path, format="parquet").to_table(
-                filter=pc.field("file") == partition.data_rel,
-                columns=["row_index"],
-            )
-            positions = set(newdv["row_index"].to_pylist())
-            if partition.prior_dv_path:
-                olddv = ds.dataset(
-                    partition.prior_dv_path, format="parquet"
-                ).to_table(
-                    filter=pc.field("file") == partition.data_rel,
-                    columns=["row_index"],
+            def positions(dv_path: str) -> set:
+                return set(
+                    ds.dataset(dv_path, format="parquet").to_table(
+                        filter=pc.field("file") == partition.data_rel,
+                        columns=["row_index"],
+                    )["row_index"].to_pylist()
                 )
-                positions -= set(olddv["row_index"].to_pylist())
-            dataset = ds.dataset(partition.path, format="parquet")
-            want = [
-                p for p in partition.phys_names
-                if p is not None and p in dataset.schema.names
-            ]
-            tbl = dataset.take(sorted(positions), columns=want)
-            for rec in tbl.to_pylist():
-                vals = tuple(
-                    rec[p] if (p is not None and p in rec)
-                    else partition.fill_values.get(nm)
-                    for nm, p in zip(partition.field_names, partition.phys_names)
-                )
-                yield vals + ("delete",) + tail
-            return
 
-        dataset = ds.dataset(partition.path, format="parquet")
-        phys = partition.phys_names or list(partition.field_names)
-        want = [p for p in phys if p is not None] + (
-            ["_change_type"] if partition.kind == "cdf_file" else []
-        )
-        cols = [c for c in want if c in dataset.schema.names]
-        for batch in dataset.to_table(columns=cols).to_batches():
-            data = batch.to_pylist()
-            for rec in data:
-                base = tuple(
-                    rec.get(p) if p is not None else None for p in phys
-                )
-                if partition.kind == "cdf_file":
-                    yield base + (rec.get("_change_type"),) + tail
-                else:
-                    yield base + ("insert",) + tail
+            delta = positions(partition.dv_path)
+            if partition.prior_dv_path:
+                delta -= positions(partition.prior_dv_path)
+            for rec in dataset.take(sorted(delta), columns=want).to_pylist():
+                yield row(rec, "delete")
+            return
+        if partition.kind == "cdf_file":
+            want.append("_change_type")
+        for batch in dataset.to_table(columns=want).to_batches():
+            for rec in batch.to_pylist():
+                yield row(rec, rec.get("_change_type", "insert"))
 
 
 class LakeCDFDataSource(DataSource):

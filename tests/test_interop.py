@@ -606,7 +606,7 @@ def test_frozen_scan_prunes_files(spark, lake, tmp_path):
     out = str(tmp_path / "m.ducklake")
     freeze_lake(lake, out)
     frozen = FrozenLake(spark, out)
-    assert len(frozen._tables["t"]["files"]) == 3
+    assert len(frozen._table("t")["state"].files) == 3
     # metadata pruning: only one file may hold a >= 250
     assert len(frozen.prune_files("t", "a >= 250")) == 1
     assert len(frozen.prune_files("t", "a = 150")) == 1

@@ -64,6 +64,28 @@ def test_frozen_table_with_dv_materializes(spark, lake, tmp_path):
     assert sorted(r.k for r in dst.table("t").collect()) == [0, 1, 3, 5]
 
 
+@pytest.mark.parametrize("alter", ["drop_readd", "add_default"])
+def test_frozen_table_with_older_vintage_materializes(spark, lake, tmp_path, alter):
+    """A file that predates a re-added or defaulted column holds the
+    wrong bytes (or none) for it: registered as it is, the migrated
+    table would read the dropped column's values or NULL. Such a table
+    materializes through FrozenLake, which maps the file's vintage."""
+    lake.create_table("t", "k int, v string")
+    lake.insert("t", spark.createDataFrame([(1, "old")], "k int, v string"))
+    if alter == "drop_readd":
+        lake.drop_column("t", "v")
+        lake.add_column("t", "v", "string")
+    else:
+        lake.add_column("t", "s", "int", default="7")
+    out = str(tmp_path / "vintage.ducklake")
+    lake.freeze(out)
+    dst = _mklake(spark, tmp_path, "dst")
+    assert dst.copy_from_database(out)["tables"]["t"]["mode"] == "insert"
+    want = [tuple(r) for r in lake.table("t").collect()]
+    assert want in ([(1, None)], [(1, "old", 7)])
+    assert [tuple(r) for r in dst.table("t").collect()] == want
+
+
 def test_plain_duckdb_source(spark, tmp_path):
     """A regular DuckDB database: schemas become namespaces, NOT NULL
     survives, and data lands via the parquet interchange (register)."""

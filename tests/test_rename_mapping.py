@@ -238,3 +238,107 @@ def test_inline_predicate_sees_default_and_renamed(lake, spark):
     # match the buffered row exactly like a scan would.
     assert lake.delete("t6", "h = 'x' AND c = 5") == 1
     assert lake.table("t6").count() == 0
+
+
+_VINTAGE_CASES = ["drop_readd", "add_default", "rename_readd"]
+
+
+def _vintage_table(lake, spark, case):
+    """Table ``v``: ids 0-19 in a file and 20-24 inline, written under
+    ``(id, x)``; then one vintage case; then ids 30-39 in a file and
+    40-44 inline under the new schema. Returns the rows every reader
+    must give and the snapshot of the last insert."""
+    lake.create_table(
+        "v", "id bigint, x string", options={"data_inlining_row_limit": 16}
+    )
+    lake.insert(
+        "v",
+        spark.createDataFrame(
+            [(i, f"old{i}") for i in range(20)], "id bigint, x string"
+        ),
+    )
+    lake.insert_rows("v", [{"id": i, "x": f"old{i}"} for i in range(20, 25)])
+    if case == "drop_readd":  # the re-added x must not read the old bytes
+        lake.drop_column("v", "x")
+        lake.add_column("v", "x", "string")
+        old = lambda i: (i, None)  # noqa: E731
+    elif case == "add_default":  # older rows read the initial default
+        lake.add_column("v", "s", "int", default="7")
+        old = lambda i: (i, f"old{i}", 7)  # noqa: E731
+    else:  # rename_readd: y keeps x's bytes, the new x reads NULL
+        lake.rename_column("v", "x", "y")
+        lake.add_column("v", "x", "string")
+        old = lambda i: (i, f"old{i}", None)  # noqa: E731
+    schema = lake.table("v").schema
+    new = [
+        tuple(
+            i if f.name == "id" else f"{f.name}{i}" if f.name != "s" else i % 5
+            for f in schema.fields
+        )
+        for i in list(range(30, 40)) + list(range(40, 45))
+    ]
+    lake.insert("v", spark.createDataFrame(new[:10], schema))
+    lake.insert_rows("v", [dict(zip(schema.names, r)) for r in new[10:]])
+    return [old(i) for i in range(25)] + new, old
+
+
+def _rows(rows, n=None):
+    """``rows`` cut to their first ``n`` fields, in one order (by repr:
+    the same id can hold a NULL in one row and a value in another)."""
+    return sorted((tuple(r)[:n] for r in rows), key=repr)
+
+
+@pytest.mark.parametrize("case", _VINTAGE_CASES)
+def test_every_reader_applies_one_vintage_rule(lake, spark, tmp_path, case):
+    """Live files and inline rows, a frozen export, change-feed inserts
+    (files and inline rows), a DV delete's derived rows and an UPDATE's
+    change rows all map a column to what data of its vintage holds:
+    the name before later renames, NULL for a column added after it, or
+    the column's initial_default."""
+    from pg_ducklake_spark.freeze import FrozenLake
+
+    want, old = _vintage_table(lake, spark, case)
+    n = len(want[0])
+    want = _rows(want)
+    assert _rows(lake.table("v").collect()) == want
+    out = os.path.join(str(tmp_path), "v.ducklake")
+    lake.freeze(out)
+    assert _rows(FrozenLake(spark, out).table("v").collect()) == want
+    feed = lake.table_changes("v", 1, lake.current_snapshot("v"))
+    assert _rows(feed.filter("_change_type = 'insert'").collect(), n) == want
+
+    lake.delete("v", "id IN (1, 2, 21)")
+    deleted = lake.table_deletions("v", lake.current_snapshot("v"))
+    assert _rows(deleted.collect(), n) == _rows([old(1), old(2), old(21)])
+    lake.update("v", {"id": "id + 1000"}, "id IN (10, 11, 22)")
+    ch = lake.table_changes("v", lake.current_snapshot("v"))
+    pre = ch.filter("_change_type = 'update_preimage'").collect()
+    post = ch.filter("_change_type = 'update_postimage'").collect()
+    assert _rows(pre, n) == _rows([old(10), old(11), old(22)])
+    assert _rows(post, n) == _rows(
+        (i + 1000,) + old(i)[1:] for i in (10, 11, 22)
+    )
+
+
+@pytest.mark.parametrize("case", _VINTAGE_CASES)
+def test_cdc_stream_reader_applies_one_vintage_rule(lake, spark, case):
+    """The lake_cdf stream reader, planned and read directly (no
+    streaming query), gives the batch feed's rows for insert files,
+    inline rows, DV deletes and UPDATE change files."""
+    from pg_ducklake_spark.streaming.cdc_source import LakeCDFStreamReader
+
+    want, old = _vintage_table(lake, spark, case)
+    n = len(want[0])
+    lake.delete("v", "id IN (1, 2, 21)")
+    lake.update("v", {"id": "id + 1000"}, "id IN (10, 11, 22)")
+    reader = LakeCDFStreamReader(lake.path, "v", 1)
+    parts = reader.partitions({"version": 0}, reader.latestOffset())
+    assert {p.kind for p in parts} >= {"insert_file", "inline", "dv_delete", "cdf_file"}
+    got = [row for p in parts for row in reader.read(p)]
+    assert _rows((r for r in got if r[n] == "insert"), n) == _rows(want)
+    assert _rows((r for r in got if r[n] == "delete"), n) == _rows(
+        [old(1), old(2), old(21)]
+    )
+    # Both feeds without _commit_timestamp, the last field.
+    batch = lake.table_changes("v", 1).collect()
+    assert _rows(r[:-1] for r in got) == _rows(tuple(r)[:-1] for r in batch)

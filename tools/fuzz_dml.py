@@ -1,10 +1,13 @@
 """Randomized differential DML: apply a seeded random sequence of
 lakehouse mutations (batch inserts, inline-path inserts, predicate
-updates, predicate deletes, merges, vacuum, inline flush) to a Lake table AND
-mirror every data-changing op onto a plain DuckDB table, comparing the
-full table contents after every step — then spot-check TIME TRAVEL by
-replaying the DuckDB mirror up to an earlier op and comparing it with
-the lake as of that op's snapshot.
+updates, predicate deletes, merges, vacuum, inline flush, and now and
+then a schema change: ADD COLUMN with or without DEFAULT, RENAME, DROP,
+DROP then re-ADD) to a Lake table AND mirror every data- or
+schema-changing op onto a plain DuckDB table, comparing the full table
+contents after every step — then spot-check TIME TRAVEL by replaying the
+DuckDB mirror up to an earlier op and comparing it with the lake as of
+that op's snapshot, reconcile the change feed, and check that a frozen
+export reads like the mirror.
 
 This drives the surfaces the curated tests pin (deletion vectors,
 copy-on-write updates, the inline buffer, vacuum rewrite/merge,
@@ -32,6 +35,87 @@ import duckdb
 SCHEMA = "id bigint, grp string, val bigint"
 DUCK_SCHEMA = "id BIGINT, grp VARCHAR, val BIGINT"
 GROUPS = ["a", "b", "c", "d", "e"]
+DUCK_TYPES = {"bigint": "BIGINT", "string": "VARCHAR"}
+
+
+def _sql_lit(v) -> str:
+    if v is None:
+        return "NULL"
+    return f"'{v}'" if isinstance(v, str) else str(v)
+
+
+class Columns:
+    """The table's columns after ``id, grp, val``: name -> lake type.
+    The DML predicates only name the first three, so schema changes
+    only touch these. Schema changes and the values of these columns
+    draw from their own generator, so a seed runs the same DML ops
+    with and without them."""
+
+    def __init__(self, seed: int):
+        self.rng = random.Random(f"columns-{seed}")
+        self.extra: dict[str, str] = {}
+        self.freed: list[str] = []  # dropped or renamed-away names
+        self.n = 0
+
+    def ddl(self) -> str:
+        return ", ".join([SCHEMA] + [f"{c} {t}" for c, t in self.extra.items()])
+
+    def names(self) -> list[str]:
+        return ["id", "grp", "val"] + list(self.extra)
+
+    def values(self) -> tuple:
+        rng = self.rng
+        return tuple(
+            None if rng.random() < 0.2
+            else rng.randint(0, 99) if t == "bigint"
+            else rng.choice(GROUPS)
+            for t in self.extra.values()
+        )
+
+    def alter(self, lake, mirror) -> str:
+        """Apply one random schema change to both sides."""
+        rng = self.rng
+        kinds = ["add", "add_default"]
+        if self.extra:
+            kinds += ["rename", "drop", "drop_readd"]
+        kind = rng.choice(kinds)
+        if kind.startswith("add"):
+            if self.freed and rng.random() < 0.5:  # name reuse
+                name = self.freed.pop(rng.randrange(len(self.freed)))
+            else:
+                name, self.n = f"x{self.n}", self.n + 1
+            typ = rng.choice(["bigint", "string"])
+            default = None
+            if kind == "add_default":
+                default = str(rng.randint(0, 99)) if typ == "bigint" else "'dflt'"
+            lake.add_column("f", name, typ, default=default)
+            mirror.apply(
+                f"ALTER TABLE f ADD COLUMN {name} {DUCK_TYPES[typ]}"
+                + (f" DEFAULT {default}" if default is not None else "")
+            )
+            self.extra[name] = typ
+            return f"{kind} {name} {typ}"
+        name = rng.choice(list(self.extra))
+        if kind == "rename":
+            new, self.n = f"x{self.n}", self.n + 1
+            lake.rename_column("f", name, new)
+            mirror.apply(f"ALTER TABLE f RENAME COLUMN {name} TO {new}")
+            self.extra = {(new if c == name else c): t for c, t in self.extra.items()}
+            self.freed.append(name)
+            return f"rename {name} {new}"
+        typ = self.extra.pop(name)
+        lake.drop_column("f", name)
+        if kind == "drop":
+            mirror.apply(f"ALTER TABLE f DROP COLUMN {name}")
+            self.freed.append(name)
+            return f"drop {name}"
+        lake.add_column("f", name, typ)
+        mirror.apply(
+            f"ALTER TABLE f DROP COLUMN {name};"
+            f" ALTER TABLE f ADD COLUMN {name} {DUCK_TYPES[typ]}"
+        )
+        self.extra[name] = typ
+        return f"drop_readd {name}"
 
 
 def _preds(rng: random.Random, next_id: int):
@@ -63,7 +147,7 @@ def _ordered(rows) -> list:
     return sorted(rows, key=lambda r: tuple((v is not None, v) for v in r))
 
 
-def _merge_op(rng: random.Random, next_id: int):
+def _merge_op(rng: random.Random, next_id: int, cols: Columns):
     """A random MERGE on ``id``: source rows hitting live, deleted and
     never-used ids (fresh ids start at ``next_id``), sometimes a NULL id
     (never matches: inserted); updates or deletes the matched rows,
@@ -74,7 +158,10 @@ def _merge_op(rng: random.Random, next_id: int):
     ids = set(rng.sample(range(max(next_id, 1)), k=min(next_id, rng.randint(1, 6))))
     ids |= {next_id + i for i in range(rng.randint(0 if ids else 1, 3))}
     keys = sorted(ids) + ([None] if rng.random() < 0.3 else [])
-    rows = [(k, rng.choice(GROUPS), rng.randint(0, 999)) for k in keys]
+    rows = [
+        (k, rng.choice(GROUPS), rng.randint(0, 999)) + cols.values()
+        for k in keys
+    ]
     action = rng.choice(["update", "delete"])
     insert = rng.random() < 0.8
     kw = {
@@ -82,20 +169,22 @@ def _merge_op(rng: random.Random, next_id: int):
         "when_matched_delete": action == "delete",
         "when_not_matched_insert": insert,
     }
-    vals = ", ".join(
-        f"({'NULL' if k is None else k}, '{g}', {v})" for k, g, v in rows
+    names = cols.names()
+    vals = ", ".join(f"({', '.join(_sql_lit(v) for v in r)})" for r in rows)
+    extra = "".join(
+        f", CAST(s.{c} AS {DUCK_TYPES[t]}) AS {c}" for c, t in cols.extra.items()
     )
     sql = [
         "CREATE OR REPLACE TEMP TABLE m AS SELECT CAST(s.id AS BIGINT) AS id,"
-        " s.grp, CAST(s.val AS BIGINT) AS val,"
+        f" s.grp, CAST(s.val AS BIGINT) AS val{extra},"
         " EXISTS (SELECT 1 FROM f WHERE f.id = s.id) AS hit"
-        f" FROM (VALUES {vals}) s(id, grp, val)",
+        f" FROM (VALUES {vals}) s({', '.join(names)})",
         "UPDATE f SET val = f.val + m.val FROM m WHERE m.hit AND f.id = m.id"
         if action == "update"
         else "DELETE FROM f WHERE id IN (SELECT id FROM m WHERE hit)",
     ]
     if insert:
-        sql.append("INSERT INTO f SELECT id, grp, val FROM m WHERE NOT hit")
+        sql.append(f"INSERT INTO f SELECT {', '.join(names)} FROM m WHERE NOT hit")
     return rows, kw, "; ".join(sql)
 
 
@@ -114,11 +203,15 @@ class Mirror:
     def rows(self):
         return _ordered(self.con.execute("SELECT * FROM f").fetchall())
 
-    def replay(self, upto: int):
+    def replay(self, upto: int, alters_upto: int | None = None):
+        """The table after the first ``upto`` logged ops, then the
+        schema changes among the ops up to ``alters_upto``: the rows of
+        op ``upto`` as a later schema shows them."""
         con = duckdb.connect()
         con.execute(f"CREATE TABLE f ({DUCK_SCHEMA})")
-        for sql in self.log[:upto]:
-            con.execute(sql)
+        for i, sql in enumerate(self.log[: alters_upto or upto]):
+            if i < upto or sql.startswith("ALTER TABLE"):
+                con.execute(sql)
         return _ordered(con.execute("SELECT * FROM f").fetchall())
 
 
@@ -139,6 +232,7 @@ def run(ops: int, seed: int, spark=None) -> list[str]:
             "f", SCHEMA, options={"data_inlining_row_limit": 4}
         )
         mirror = Mirror()
+        cols = Columns(seed)
         next_id = 0
         versions: list[int] = []  # lake snapshot after each mirrored op
 
@@ -146,38 +240,28 @@ def run(ops: int, seed: int, spark=None) -> list[str]:
             return _ordered(tuple(r) for r in lake.table("f").collect())
 
         for step in range(ops):
-            op = rng.choices(
+            op = "alter" if cols.rng.random() < 0.08 else rng.choices(
                 ["insert", "insert_inline", "update", "delete",
                  "merge", "vacuum", "flush"],
                 weights=[30, 15, 20, 20, 15, 8, 7],
             )[0]
-            if op == "insert":
-                n = rng.randint(3, 12)
+            if op in ("insert", "insert_inline"):
+                # the inline path stays under the inline limit
+                n = rng.randint(3, 12) if op == "insert" else rng.randint(1, 3)
                 rows = [
                     (next_id + i, rng.choice(GROUPS), rng.randint(0, 999))
+                    + cols.values()
                     for i in range(n)
                 ]
                 next_id += n
-                lake.insert(
-                    "f", spark.createDataFrame(rows, SCHEMA)
-                )
-                mirror.apply(
-                    "INSERT INTO f VALUES "
-                    + ", ".join(f"({i}, '{g}', {v})" for i, g, v in rows)
-                )
-            elif op == "insert_inline":
-                n = rng.randint(1, 3)  # under the inline limit
-                rows = [
-                    {"id": next_id + i, "grp": rng.choice(GROUPS),
-                     "val": rng.randint(0, 999)}
-                    for i in range(n)
-                ]
-                next_id += n
-                lake.insert_rows("f", rows)
+                if op == "insert":
+                    lake.insert("f", spark.createDataFrame(rows, cols.ddl()))
+                else:
+                    lake.insert_rows("f", [dict(zip(cols.names(), r)) for r in rows])
                 mirror.apply(
                     "INSERT INTO f VALUES "
                     + ", ".join(
-                        f"({r['id']}, '{r['grp']}', {r['val']})" for r in rows
+                        f"({', '.join(_sql_lit(v) for v in r)})" for r in rows
                     )
                 )
             elif op == "update":
@@ -190,9 +274,9 @@ def run(ops: int, seed: int, spark=None) -> list[str]:
                 lake.delete("f", pred)
                 mirror.apply(f"DELETE FROM f WHERE {pred}")
             elif op == "merge":
-                rows, kw, sql = _merge_op(rng, next_id)
+                rows, kw, sql = _merge_op(rng, next_id, cols)
                 next_id += len(rows)
-                src = spark.createDataFrame(rows, SCHEMA)
+                src = spark.createDataFrame(rows, cols.ddl())
                 try:
                     lake.merge("f", src, ["id"], **kw)
                 except LakeError as e:  # matched an unflushed inline row
@@ -201,11 +285,13 @@ def run(ops: int, seed: int, spark=None) -> list[str]:
                     lake.flush_inlined_data()
                     lake.merge("f", src, ["id"], **kw)
                 mirror.apply(sql)
+            elif op == "alter":
+                op = f"alter {cols.alter(lake, mirror)}"
             elif op == "vacuum":
                 lake.vacuum("f")  # no mirror: must not change contents
             else:
                 lake.flush_inlined_data()  # ditto
-            if op in ("insert", "insert_inline", "update", "delete", "merge"):
+            if op not in ("vacuum", "flush"):
                 versions.append(lake.current_snapshot("f"))
             got, want = lake_rows(), mirror.rows()
             if got != want:
@@ -245,16 +331,18 @@ def run(ops: int, seed: int, spark=None) -> list[str]:
                 v1, v2 = versions[k1 - 1], versions[k2 - 1]
                 feed = lake.table_changes("f", v1 + 1, v2).collect()
                 plus = Counter(
-                    (r.id, r.grp, r.val)
+                    tuple(r)[:-3]
                     for r in feed
                     if r._change_type in ("insert", "update_postimage")
                 )
                 minus = Counter(
-                    (r.id, r.grp, r.val)
+                    tuple(r)[:-3]
                     for r in feed
                     if r._change_type in ("delete", "update_preimage")
                 )
-                state = Counter(mirror.replay(k1))
+                # The rows at k1 as the schema at k2 shows them: the
+                # feed reports every row under its end schema.
+                state = Counter(mirror.replay(k1, alters_upto=k2))
                 state.update(plus)
                 state.subtract(minus)
                 want = Counter(mirror.replay(k2))
@@ -266,6 +354,21 @@ def run(ops: int, seed: int, spark=None) -> list[str]:
                         f" reconcile: extra={dict(list(delta.items())[:2])}"
                         f" missing={dict(list(missing.items())[:2])}"
                     )
+
+        # freeze: a frozen export reads like the mirror
+        if not problems:
+            from pg_ducklake_spark.freeze import FrozenLake
+
+            out = os.path.join(tmp, "frozen.ducklake")
+            lake.freeze(out)
+            fro = _ordered(
+                tuple(r) for r in FrozenLake(spark, out).table("f").collect()
+            )
+            if fro != mirror.rows():
+                problems.append(
+                    f"frozen read: {len(fro)} rows, mirror"
+                    f" {len(mirror.rows())}; first: {fro[:2]}"
+                )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return problems
@@ -290,7 +393,7 @@ def main() -> int:
             print(f"seed {s} DIVERGED: {p}")
         bad += len(problems)
         if not problems:
-            print(f"seed {s}: {args.ops} ops + time-travel checks agree")
+            print(f"seed {s}: {args.ops} ops + time-travel, feed and freeze checks agree")
     return 1 if bad else 0
 
 
