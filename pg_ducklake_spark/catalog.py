@@ -452,7 +452,7 @@ class SnapshotLog:
         # an EXISTING snapshot id in place (a pending-txn marker
         # landing, checkpoint rollback): (snapshot_id, epoch) is a
         # sound cache key for derived state where snapshot_id alone is
-        # not. Consumers: Lake._table_df_cache / _dv_key_cache.
+        # not. Consumer: Lake._table_df_cache.
         self.epoch = 0
 
     # -- log primitives ----------------------------------------------------

@@ -592,7 +592,7 @@ def read_files(
     rels: list[str] | None = None,
     keep_meta: bool = False,
     dv_rows: DataFrame | None = None,
-    dv_keys: Callable[[Callable[[], DataFrame]], DataFrame] | None = None,
+    dv_keys: Callable[[tuple, Callable[[], DataFrame]], DataFrame] | None = None,
     dv_broadcast_max: int = DV_BROADCAST_MAX_POSITIONS,
 ) -> DataFrame:
     """Data files of ``state`` (``rels`` only, when given; paths relative
@@ -605,8 +605,9 @@ def read_files(
 
     ``dv_rows`` holds the deleted positions as (file, row_index) rows;
     when None they are read from the DV parquet files the state names.
-    ``dv_keys(build)`` may return a cached packed key set in place of
-    ``build()`` (``Lake`` caches it per table snapshot for full scans).
+    ``dv_keys(dvs, build)`` may return a cached packed key set in place
+    of ``build()``; ``dvs`` is the scan's sorted (data file, DV path)
+    pairs, which determine the set (``Lake`` caches it for full scans).
     ``keep_meta`` keeps ``_dl_fp`` / ``_dl_ri`` (file URI, row index)."""
     rels = sorted(state.files) if rels is None else sorted(rels)
     meta = [
@@ -741,10 +742,13 @@ def read_files(
                     .select((pack + F.col("row_index")).alias("_dl_key"))
                 )
 
-            # fids is sorted(applicable), deterministic for a given
-            # state, so a cached key set stays consistent with this
-            # call's probe-side fid map.
-            dvk = dv_keys(build) if dv_keys is not None else build()
+            # fids is sorted(applicable), so a key set cached under the
+            # same (file, DV) pairs numbers files as this call's
+            # probe-side fid map does.
+            dvk = (
+                dv_keys(tuple((f, applicable[f]["path"]) for f in fids), build)
+                if dv_keys is not None else build()
+            )
             if size_ok:
                 on, fmap = "_dl_sz", [(sizes[rel], i) for i, rel in enumerate(fids)]
                 on_type = T.LongType()
@@ -928,15 +932,17 @@ class Lake:
         except Exception:
             pass  # older runtime without the conf — TIME DDL will error
         self._logs: dict[str, SnapshotLog] = {}
-        # (canon name, snapshot_id) -> persisted DV packed-key frame:
-        # the DV parquet of a given snapshot is immutable, so repeated
-        # full-table masked scans reuse the cached key set instead of
-        # re-running the DV scan job per query; memory is bounded at
-        # 8 bytes per deleted position and at most
-        # _DV_KEY_CACHE_PER_TABLE entries per table (lowest snapshot
-        # evicted first, so alternating latest-version and time-travel
-        # scans don't thrash the steady-state entry; see _dv_keys).
-        self._dv_key_cache: dict[tuple[str, int], DataFrame] = {}
+        # (canon name, sorted (data file, DV path) pairs) -> persisted
+        # DV packed-key frame: DV files (_dv/<uuid>) are never
+        # rewritten, so repeated full-table masked scans reuse the
+        # cached key set instead of re-running the DV scan job per
+        # query, across every commit that leaves the DVs alone (an
+        # insert, an inline flush). Memory is bounded at 8 bytes per
+        # deleted position and at most _DV_KEY_CACHE_PER_TABLE entries
+        # per table (least recently used evicted first, so alternating
+        # latest-version and time-travel scans don't thrash the
+        # steady-state entry; see _dv_keys).
+        self._dv_key_cache: dict[tuple[str, tuple], DataFrame] = {}
         # (canon name, snapshot_id, with_rowid) -> constructed table
         # DataFrame: the plan of a (table, snapshot) is immutable, so
         # repeated table() calls skip the py4j plan re-construction
@@ -1939,48 +1945,42 @@ class Lake:
     DV_BROADCAST_MAX_POSITIONS = DV_BROADCAST_MAX_POSITIONS
 
     # Per-table cap on cached DV key sets (latest + a few time-travel
-    # vintages); lowest snapshot_id evicted first.
+    # vintages); least recently used evicted first.
     _DV_KEY_CACHE_PER_TABLE = 4
 
-    def _dv_args(self, name: str, state: TableState, rels) -> dict:
+    def _dv_args(self, name: str, rels) -> dict:
         """``read_files`` DV arguments for a scan of ``name``: this
         lake's broadcast guard, and for a full scan (``rels`` None) its
         DV key cache."""
         return {
             "dv_broadcast_max": self.DV_BROADCAST_MAX_POSITIONS,
             "dv_keys": None if rels is not None else (
-                lambda build: self._dv_keys(name, state, build)
+                lambda dvs, build: self._dv_keys(name, dvs, build)
             ),
         }
 
     def _dv_keys(
-        self, name: str, state: TableState, build: Callable[[], DataFrame]
+        self, name: str, dvs: tuple, build: Callable[[], DataFrame]
     ) -> DataFrame:
-        """The packed DV key set of a full scan of ``state``. It is
-        immutable per (table, snapshot), so it is persisted and reused:
-        the per-query DV scan job disappears in the steady state (an
-        analytics session runs many reads between deletes). Up to
-        _DV_KEY_CACHE_PER_TABLE versions per table are kept (lowest
-        snapshot evicted first) so time-travel reads don't thrash the
-        steady-state latest entry. Same pending-txn hazard as the
-        table-df cache: a state that skipped an unresolved txn mutates
-        in place when the marker lands — snapshot_id is not a key."""
-        log = self._log(name)
-        if log.has_unresolved():
-            return build()
-        ckey = (self._canon(name), state.snapshot_id, log.epoch)
-        dvk = self._dv_key_cache.get(ckey)
+        """The packed DV key set of a full scan whose DV'd files are
+        ``dvs`` ((data file, DV path) pairs, sorted). DV files are never
+        rewritten, so the set is a function of ``dvs`` alone: it is
+        persisted and reused until a commit changes the table's DVs
+        (an analytics session runs many reads between deletes). Up to
+        _DV_KEY_CACHE_PER_TABLE sets per table are kept (least recently
+        used evicted first) so time-travel reads don't thrash the
+        steady-state latest entry."""
+        ckey = (self._canon(name), dvs)
+        dvk = self._dv_key_cache.pop(ckey, None)
         if dvk is None:
             dvk = build().persist(StorageLevel.MEMORY_AND_DISK)
-            sibs = [k for k in self._dv_key_cache if k[0] == ckey[0] and k != ckey]
+            sibs = [k for k in self._dv_key_cache if k[0] == ckey[0]]
             while len(sibs) >= self._DV_KEY_CACHE_PER_TABLE:
-                victim = min(sibs, key=lambda k: k[1])
-                sibs.remove(victim)
                 try:
-                    self._dv_key_cache.pop(victim).unpersist()
+                    self._dv_key_cache.pop(sibs.pop(0)).unpersist()
                 except Exception:
                     pass
-            self._dv_key_cache[ckey] = dvk
+        self._dv_key_cache[ckey] = dvk  # (re)insert last: most recent
         return dvk
 
     def _read_files(
@@ -1994,7 +1994,7 @@ class Lake:
         """:func:`read_files` over table ``name``."""
         return read_files(
             self.spark, self._table_dir(name), state, schema, rels, keep_meta,
-            **self._dv_args(name, state, rels),
+            **self._dv_args(name, rels),
         )
 
     def _resolve_version(
@@ -2051,7 +2051,7 @@ class Lake:
             return hit
         out = table_rows(
             self.spark, self._table_dir(name), state, schema,
-            with_rowid=with_rowid, **self._dv_args(name, state, None),
+            with_rowid=with_rowid, **self._dv_args(name, None),
         )
         self._table_df_put(ckey, out)
         return out
@@ -2086,7 +2086,7 @@ class Lake:
         return table_rows(
             self.spark, self._table_dir(name), state,
             state.schema_at(state.snapshot_id), rels, with_rowid,
-            **self._dv_args(name, state, rels),
+            **self._dv_args(name, rels),
         ).filter(F.expr(where))
 
     def sql(self, query: str) -> DataFrame:

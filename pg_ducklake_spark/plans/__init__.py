@@ -106,27 +106,6 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 _PROBE_CACHE: dict = {}
 
 
-def _session_probe_info(sc) -> tuple[int, str]:
-    """(defaultParallelism, applicationId) for ``sc``, memoized.
-
-    The memo entry holds a weakref to the context it was computed for:
-    ``id(sc)`` alone can be reused after a stopped context is
-    garbage-collected (ADVICE r12), so a hit only counts when the ref
-    still points at the same live object. applicationId is unique per
-    context, so probe entries keyed on it can never alias across
-    sessions.
-    """
-    import weakref
-
-    ent = _PROBE_CACHE.get(id(sc))
-    if ent is not None and isinstance(ent, tuple) and ent[0]() is sc:
-        return ent[1], ent[2]
-    dp = sc.defaultParallelism
-    app_id = sc.applicationId
-    _PROBE_CACHE[id(sc)] = (weakref.ref(sc), dp, app_id)
-    return dp, app_id
-
-
 def rebalance(
     df: DataFrame,
     partitions: int | None = None,
@@ -151,8 +130,7 @@ def rebalance(
     """
     spark = df.sparkSession
     sc = spark.sparkContext
-    dp, app_id = _session_probe_info(sc)
-    target = partitions or dp
+    target = partitions or sc.defaultParallelism
     # The probe (df.rdd.getNumPartitions()) costs a full physical plan
     # + JavaRDD setup (~50-120 ms of driver time) per BUILD; its answer
     # depends only on the scanned file set and the split confs, so for
@@ -174,7 +152,9 @@ def rebalance(
             mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
         except Exception:
             mpb = "<default>"
-        key = (app_id, tag, mpb)
+        # applicationId is unique per context, so entries never alias
+        # across sessions.
+        key = (sc.applicationId, tag, mpb)
         cur = _PROBE_CACHE.get(key)
     if cur is None:
         try:

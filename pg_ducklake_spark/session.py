@@ -14,69 +14,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-_PY4J_NODELAY_DONE = False
-
-
-def _enable_py4j_nodelay() -> None:
-    """Set TCP_NODELAY on every py4j control-channel socket.
-
-    py4j never sets it, and on kernels/virtualized network stacks where
-    loopback small-packet delivery is not free (measured here: ~6 ms per
-    Nagle-delayed segment, 39 ms per py4j round trip) every DataFrame
-    API call pays the Nagle/delayed-ACK stall. With NODELAY the same
-    round trip measures ~4.8 ms — an 8x cut to ALL driver-side plan
-    construction (guide §1: the bench's plan_build_sec is pure py4j
-    traffic). On a normal kernel loopback this is a no-op (segments
-    already flush immediately); it never changes semantics, only
-    flushing, so it is safe everywhere.
-    """
-    global _PY4J_NODELAY_DONE
-    if _PY4J_NODELAY_DONE:
-        return
-    _PY4J_NODELAY_DONE = True
-    import socket as _socket
-
-    def _nodelay(sock) -> None:
-        try:
-            sock.setsockopt(_socket.IPPROTO_TCP, _socket.TCP_NODELAY, 1)
-        except Exception:
-            pass  # non-TCP (SSL-wrapped, UDS) or already-closed socket
-
-    try:
-        import py4j.clientserver as _cs
-
-        _orig_cs_connect = _cs.ClientServerConnection.connect_to_java_server
-
-        def _cs_connect(self):
-            _orig_cs_connect(self)
-            _nodelay(self.socket)
-
-        _cs.ClientServerConnection.connect_to_java_server = _cs_connect
-
-        # Java -> Python callback connections are accepted sockets on the
-        # Python-side server; patch them at init so both directions flush.
-        _orig_cs_init = _cs.ClientServerConnection.init_socket_from_python_server
-
-        def _cs_init(self, socket, stream):
-            _orig_cs_init(self, socket, stream)
-            _nodelay(socket)
-
-        _cs.ClientServerConnection.init_socket_from_python_server = _cs_init
-    except Exception:
-        pass
-    try:
-        import py4j.java_gateway as _jg
-
-        _orig_gw_start = _jg.GatewayConnection.start
-
-        def _gw_start(self):
-            _orig_gw_start(self)
-            _nodelay(self.socket)
-
-        _jg.GatewayConnection.start = _gw_start
-    except Exception:
-        pass
-
 
 def _fast_scratch_dir(sub: str) -> str | None:
     """A tmpfs-backed scratch dir when the host has one, else None.
@@ -130,10 +67,6 @@ def get_spark(app_name: str = "pg_ducklake_spark", cpus: int | None = None) -> S
         os.environ["PYTHONPATH"] = (
             f"{repo_root}{os.pathsep}{existing}" if existing else repo_root
         )
-    _enable_py4j_nodelay()
-    from pg_ducklake_spark import rpcslim
-
-    rpcslim.install()
     shuffle = max(4, min(64, cpus))
     builder = (
         SparkSession.builder.appName(app_name)
@@ -145,7 +78,7 @@ def get_spark(app_name: str = "pg_ducklake_spark", cpus: int | None = None) -> S
         # messages with the user line number. Measured here: F.col went
         # 13 -> 3 RPCs, whole query builds roughly halved their RPC
         # count. Diagnostic metadata only — plans and results are
-        # identical (see rpcslim.py for the companion client patches).
+        # identical.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Python data plane over unix domain sockets (Spark 4.1,
         # spark.python.unix.domain.socket.enabled): collect /

@@ -205,12 +205,12 @@ def test_dv_broadcast_guard_both_paths(spark, lake):
 
 
 def test_dv_key_cache_reuse_and_invalidation(t):
-    """r11c/r12: the packed DV key set of a (table, snapshot) is
-    persisted and reused across full-table scans; a new delete
-    (snapshot bump) gets its own entry while up to
-    _DV_KEY_CACHE_PER_TABLE older vintages stay cached (so
-    alternating latest and time-travel scans don't thrash), with the
-    lowest snapshot evicted once the cap is hit."""
+    """r11c/r12: the packed DV key set of a table's DV files is
+    persisted and reused across full-table scans; a new delete (new
+    DV files) gets its own entry while up to _DV_KEY_CACHE_PER_TABLE
+    older sets stay cached (so alternating latest and time-travel
+    scans don't thrash), with the least recently used evicted once
+    the cap is hit."""
     t.delete("t", "a < 10")
     assert t.table("t").count() == 90
     key0 = next(iter(t._dv_key_cache))
@@ -229,8 +229,26 @@ def test_dv_key_cache_reuse_and_invalidation(t):
         t.table("t").count()
     per_table = [k for k in t._dv_key_cache]
     assert len(per_table) == t._DV_KEY_CACHE_PER_TABLE
-    # the lowest snapshot (key0) was the eviction victim
+    # the least recently used set (key0) was the eviction victim
     assert key0 not in t._dv_key_cache
-    assert max(k[1] for k in per_table) == t._state("t").snapshot_id
+    dvs = t._state("t").dvs
+    assert per_table[-1][1] == tuple((f, dvs[f]["path"]) for f in sorted(dvs))
     t.drop_table("t")
     assert not t._dv_key_cache
+
+
+def test_dv_key_cache_survives_inserts(t, spark):
+    """Commits that leave the DVs alone (inserts) keep reusing the
+    table's one cached DV key set. Keyed per snapshot, every scan
+    after an insert cached the same plan again, and evicting the
+    oldest of those entries unpersisted the data they all shared."""
+    t.delete("t", "a < 10")
+    assert t.table("t").count() == 90
+    (key,) = t._dv_key_cache
+    cached = t._dv_key_cache[key]
+    for i in range(5):
+        t.insert("t", spark.createDataFrame([(100 + i, "new")], "a int, b string"))
+        assert t.table("t").count() == 91 + i
+    assert list(t._dv_key_cache) == [key]
+    assert t._dv_key_cache[key] is cached
+    assert cached.storageLevel.useMemory  # still persisted

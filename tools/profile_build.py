@@ -1,8 +1,10 @@
 """Profile per-query DataFrame BUILD cost: wall time + py4j RPC count.
 
 The bench's plan_build_sec is pure driver-side work: every DataFrame /
-Column API call is one py4j control-channel round trip (~1.7 ms TCP
-loopback floor on this VM, measured). This tool ranks the headline
+Column API call makes one or more py4j control-channel round trips
+(F.col 3, a 2-column select 15). A round trip over TCP loopback has a
+median of 0.1-1 ms on a 4-core host, depending on load (500
+``System.nanoTime()`` calls). This tool ranks the headline
 queries by build wall time and RPC count so RPC-reduction work (guide
 §7.3 — planning overhead) targets the right builders.
 
