@@ -11,7 +11,7 @@ def test_rpc_counts_stay_slim(spark):
     """Pin the per-call RPC budget of the stock client under the
     session's conf, so a conf regression or a pyspark upgrade can't
     silently reinstate the call-site capture chatter (with it on:
-    F.col = 13 RPCs, 2-col select = 64). Counts are code-path-
+    F.col = 13 RPCs, 2-col select = 65). Counts are code-path-
     deterministic."""
     import py4j.clientserver as cs
 
@@ -37,7 +37,7 @@ def test_rpc_counts_stay_slim(spark):
         cs.ClientServerConnection.send_command = orig
     assert col_rpcs <= 3, f"F.col cost {col_rpcs} RPCs (capture on: 13)"
     assert select_rpcs <= 15, (
-        f"2-col select cost {select_rpcs} RPCs (capture on: 64)"
+        f"2-col select cost {select_rpcs} RPCs (capture on: 65)"
     )
 
 
